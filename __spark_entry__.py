@@ -1900,6 +1900,7 @@ def _op_tt_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete → v2 rebased update → v3 injected update); the claims fold
     asserts the conflict fired and the history is exactly linear."""
     import astro_spark.operators.timetravel as _tt
+    import astro_spark.sources.tt_log as _tt_log
 
     _views(spark, sf_dir)
     nation = read_table(spark, sf_dir, "nation").select(
@@ -1910,16 +1911,16 @@ def _op_tt_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     a.tt_create(spark, nation, d, partition_by=["r"])
 
     def _armed_publish(interleave):
-        orig = _tt._publish
+        orig = _tt_log.publish
         armed = {"on": True}
 
-        def racing(spark_, fs, HPath, root, version, manifest):
+        def racing(store, version, manifest):
             if armed["on"] and manifest.get("op") != "create":
                 armed["on"] = False
                 interleave()
-            return orig(spark_, fs, HPath, root, version, manifest)
+            return orig(store, version, manifest)
 
-        _tt._publish = racing
+        _tt_log.publish = racing
         return orig
 
     # round 1 — disjoint: B (delete r=3) steals A's (update r=0) slot
@@ -1927,7 +1928,7 @@ def _op_tt_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         a.tt_update_where(spark, d, {"k": "k + 1000"}, "r = 0")
     finally:
-        _tt._publish = orig
+        _tt_log.publish = orig
     # round 2 — same partition: both rewrite r=1; loser must raise
     orig = _armed_publish(
         lambda: a.tt_update_where(spark, d, {"k": "k + 77"}, "r = 1")
@@ -1938,7 +1939,7 @@ def _op_tt_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     except _tt.ConcurrentWriteError:
         conflict_surfaced = True
     finally:
-        _tt._publish = orig
+        _tt_log.publish = orig
     versions = sorted(
         r.version for r in a.tt_history(spark, d).collect()
     )

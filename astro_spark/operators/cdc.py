@@ -121,85 +121,85 @@ def apply_changes(
             applied_sidecar.qualified_name
         )
 
+    # every persisted frame is released by the finally below — the
+    # validation/stats jobs included, so a failing job never leaks it
     persisted = None
-    if seq_col is not None:
-        # ONE pass validates the feed AND counts the applicable changes
-        # (r15, VERDICT r14 #4 — the former separate pre-validation agg
-        # and latest-stats agg cost two driver-synchronized jobs plus
-        # two plan analyses per call, and a streaming drain pays that
-        # per micro-batch).  The annotated frame carries the per-key
-        # latest rank and (when a sidecar exists) the already-applied
-        # seq; validation counts read ALL rows, apply counts read the
-        # keep-predicate rows, in the same aggregate.  The sidecar join
-        # keys match the window partitioning, so it rides the window's
-        # exchange rather than adding one.
-        w = Window.partitionBy(*key_cols).orderBy(
-            F.col(seq_col).desc(), F.col(op_col).desc()
-        )
-        ann = changes.withColumn("__rn", F.row_number().over(w))
-        keep = F.col("__rn") == 1
-        helper_cols = ["__rn"]
-        if sidecar_exists:
-            applied = spark.table(applied_sidecar.qualified_name).select(
-                *key_cols, F.col("__seq").alias("__applied_seq")
-            )
-            ann = ann.join(applied, on=key_cols, how="left")
-            keep = keep & (
-                F.col("__applied_seq").isNull()
-                | (F.col(seq_col) > F.col("__applied_seq"))
-            )
-            helper_cols.append("__applied_seq")
-        ann = ann.persist()
-        persisted = ann
-        stats = ann.agg(
-            F.sum(bad_op.cast("long")).alias("n_bad"),
-            F.sum((keep & (F.col(op_col) != "D")).cast("long")).alias("n_up"),
-            F.sum((keep & (F.col(op_col) == "D")).cast("long")).alias("n_del"),
-        ).collect()[0]
-        if stats["n_bad"]:
-            ann.unpersist()
-            raise ValueError(
-                f"apply_changes: {stats['n_bad']} change row(s) carry a "
-                f"NULL or unknown {op_col!r} value (must be one of "
-                f"{_VALID_OPS}) — refusing to apply a corrupted change feed"
-            )
-        latest = ann.where(keep).drop(*helper_cols)
-        n_up = int(stats["n_up"] or 0)
-        n_del = int(stats["n_del"] or 0)
-    else:
-        # no seq: validate with ONE map-side-combined aggregate over the
-        # raw changes — corrupt ops are a global any(); duplicate keys
-        # show as count(*) != count_distinct(keys).  struct-wrap the
-        # keys: count_distinct over bare columns SKIPS rows where any
-        # key is NULL, so a NULL-keyed row would falsely trip the
-        # duplicate-key guard — a non-null struct with null fields
-        # counts each NULL tuple once (ADVICE r7).  No persist: a
-        # streaming drain's single-op micro-batches stay two-job cheap.
-        pre = changes.agg(
-            F.sum(bad_op.cast("long")).alias("n_bad"),
-            F.count(F.lit(1)).alias("n_all"),
-            F.sum((F.col(op_col) != "D").cast("long")).alias("n_up_all"),
-            F.sum((F.col(op_col) == "D").cast("long")).alias("n_del_all"),
-            F.count_distinct(
-                F.struct(*[F.col(k) for k in key_cols])
-            ).alias("n_keys"),
-        ).collect()[0]
-        if pre["n_bad"]:
-            raise ValueError(
-                f"apply_changes: {pre['n_bad']} change row(s) carry a NULL "
-                f"or unknown {op_col!r} value (must be one of {_VALID_OPS}) "
-                "— refusing to apply a corrupted change feed"
-            )
-        if (pre["n_all"] or 0) != (pre["n_keys"] or 0):
-            raise ValueError(
-                "apply_changes: multiple changes share a key but no "
-                "seq_col was given — ordering would be arbitrary"
-            )
-        latest = changes  # one change per key, just proven
-        n_up = int(pre["n_up_all"] or 0)
-        n_del = int(pre["n_del_all"] or 0)
-
     try:
+        if seq_col is not None:
+            # ONE pass validates the feed AND counts the applicable changes
+            # (r15, VERDICT r14 #4 — the former separate pre-validation agg
+            # and latest-stats agg cost two driver-synchronized jobs plus
+            # two plan analyses per call, and a streaming drain pays that
+            # per micro-batch).  The annotated frame carries the per-key
+            # latest rank and (when a sidecar exists) the already-applied
+            # seq; validation counts read ALL rows, apply counts read the
+            # keep-predicate rows, in the same aggregate.  The sidecar join
+            # keys match the window partitioning, so it rides the window's
+            # exchange rather than adding one.
+            w = Window.partitionBy(*key_cols).orderBy(
+                F.col(seq_col).desc(), F.col(op_col).desc()
+            )
+            ann = changes.withColumn("__rn", F.row_number().over(w))
+            keep = F.col("__rn") == 1
+            helper_cols = ["__rn"]
+            if sidecar_exists:
+                applied = spark.table(applied_sidecar.qualified_name).select(
+                    *key_cols, F.col("__seq").alias("__applied_seq")
+                )
+                ann = ann.join(applied, on=key_cols, how="left")
+                keep = keep & (
+                    F.col("__applied_seq").isNull()
+                    | (F.col(seq_col) > F.col("__applied_seq"))
+                )
+                helper_cols.append("__applied_seq")
+            ann = ann.persist()
+            persisted = ann
+            stats = ann.agg(
+                F.sum(bad_op.cast("long")).alias("n_bad"),
+                F.sum((keep & (F.col(op_col) != "D")).cast("long")).alias("n_up"),
+                F.sum((keep & (F.col(op_col) == "D")).cast("long")).alias("n_del"),
+            ).collect()[0]
+            if stats["n_bad"]:
+                raise ValueError(
+                    f"apply_changes: {stats['n_bad']} change row(s) carry a "
+                    f"NULL or unknown {op_col!r} value (must be one of "
+                    f"{_VALID_OPS}) — refusing to apply a corrupted change feed"
+                )
+            latest = ann.where(keep).drop(*helper_cols)
+            n_up = int(stats["n_up"] or 0)
+            n_del = int(stats["n_del"] or 0)
+        else:
+            # no seq: validate with ONE map-side-combined aggregate over the
+            # raw changes — corrupt ops are a global any(); duplicate keys
+            # show as count(*) != count_distinct(keys).  struct-wrap the
+            # keys: count_distinct over bare columns SKIPS rows where any
+            # key is NULL, so a NULL-keyed row would falsely trip the
+            # duplicate-key guard — a non-null struct with null fields
+            # counts each NULL tuple once (ADVICE r7).  No persist: a
+            # streaming drain's single-op micro-batches stay two-job cheap.
+            pre = changes.agg(
+                F.sum(bad_op.cast("long")).alias("n_bad"),
+                F.count(F.lit(1)).alias("n_all"),
+                F.sum((F.col(op_col) != "D").cast("long")).alias("n_up_all"),
+                F.sum((F.col(op_col) == "D").cast("long")).alias("n_del_all"),
+                F.count_distinct(
+                    F.struct(*[F.col(k) for k in key_cols])
+                ).alias("n_keys"),
+            ).collect()[0]
+            if pre["n_bad"]:
+                raise ValueError(
+                    f"apply_changes: {pre['n_bad']} change row(s) carry a NULL "
+                    f"or unknown {op_col!r} value (must be one of {_VALID_OPS}) "
+                    "— refusing to apply a corrupted change feed"
+                )
+            if (pre["n_all"] or 0) != (pre["n_keys"] or 0):
+                raise ValueError(
+                    "apply_changes: multiple changes share a key but no "
+                    "seq_col was given — ordering would be arbitrary"
+                )
+            latest = changes  # one change per key, just proven
+            n_up = int(pre["n_up_all"] or 0)
+            n_del = int(pre["n_del_all"] or 0)
 
         fused = False
         if n_up and n_del:

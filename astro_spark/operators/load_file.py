@@ -95,13 +95,8 @@ def load_file(
                 "lists, not a Hive layout; use tt_optimize(zorder_by=) "
                 "for clustering after the load"
             )
-        from .timetravel import (
-            _fs,
-            _head,
-            _list_versions,
-            _partition_cols_of,
-            save_dataframe_versioned,
-        )
+        from ..sources import tt_log
+        from .timetravel import _store, save_dataframe_versioned
 
         target = output_table
         if partition_by:
@@ -118,10 +113,10 @@ def load_file(
             # from the handle) — a silent partition_by mismatch would
             # otherwise commit files laid out by the OLD columns while
             # the caller believes the new ones apply
-            HPath, _p, fs = _fs(spark, output_table.root)
-            if _list_versions(fs, HPath, output_table.root):
-                _v, head = _head(spark, fs, HPath, output_table.root)
-                actual = _partition_cols_of(head)
+            store = _store(spark, output_table.root)
+            if tt_log.list_versions(store):
+                _v, head = tt_log.head(store)
+                actual = tt_log.partition_cols_of(head)
                 if list(partition_by) != actual:
                     raise ValueError(
                         f"load_file: partition_by={list(partition_by)} "

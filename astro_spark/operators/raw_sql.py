@@ -310,8 +310,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
         from ..exceptions import AstroSparkError
         from ..table import validate_identifier
         from .timetravel import (
-            _fs,
-            _list_versions,
+            _versions,
             tt_create,
             tt_overwrite,
             tt_register,
@@ -338,8 +337,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
                 for c in m.group(5).split(",")
             ]
         src_sql = m.group(7)
-        HPath, _p, fs = _fs(spark, root)
-        existing = _list_versions(fs, HPath, root)
+        existing = _versions(spark, root)
         if existing and if_not_exists:
             # IF NOT EXISTS no-op: keep the table, (re)register the
             # name, return the current head — the SELECT never runs
@@ -611,15 +609,14 @@ def _rewrite_timetravel_reads(
             r"('[^']*'|\d+(?:\.\d+)?)"
         )
 
-    from .timetravel import _fs, _list_versions, tt_read
+    from .timetravel import _versions, tt_read
 
     created: list[str] = []
 
     def _sub(m: "re.Match[str]") -> str:
         root, kind, val = m.group(1), m.group(2).lower(), m.group(3)
         try:
-            HPath, _p, fs = _fs(spark, root)
-            if not _list_versions(fs, HPath, root):
+            if not _versions(spark, root):
                 return m.group(0)  # not a versioned root: leave verbatim
         except Exception:
             return m.group(0)
@@ -651,8 +648,7 @@ def _rewrite_timetravel_reads(
 
     def _resolve_head(root: str) -> str | None:
         try:
-            HPath, _p, fs = _fs(spark, root)
-            if not _list_versions(fs, HPath, root):
+            if not _versions(spark, root):
                 return None
         except Exception:
             return None

@@ -6,49 +6,30 @@ implicitly by CTAS-ing ``USING DELTA`` (``databases/databricks/
 delta.py:168-187``) and letting the Delta log provide versions.  This
 engine runs on catalogs without Delta (delta-spark is uninstallable in
 this environment — COVERAGE.md), so the log protocol is re-expressed
-minimally on any Hadoop filesystem:
+minimally on any Hadoop filesystem.
 
-Layout::
-
-    <root>/
-      _log/v00000000.json          # {"files": [...], "op", "ts", "schema"}
-      _log/v00000001.json          # or {"base": ckpt, "add": [...], "remove": [...]}
-      _log/ckpt-<uuid>.parquet     # checkpoint: complete (file, stats) snapshot
-      files/<commit-uuid>/part-*.parquet   # immutable data files
-
-Every commit writes its NEW data files under a fresh ``files/<uuid>/``
-directory (existing files are never touched — writers never conflict on
-data), then publishes a manifest resolving to the version's COMPLETE
-file list.  Readers resolve a version to its manifest and read exactly
-those files; data files with no manifest pointing at them are invisible
-(a crashed writer leaves garbage, never corruption — ``vacuum`` reclaims
-it).
-
-**Checkpointed log (Delta's checkpoint model):** small tables keep the
-complete file list INLINE in the JSON manifest.  Once a version's file
-count exceeds ``spark.astro.tt.inlineFilesMax`` (default 1000), the
-snapshot moves into a parquet CHECKPOINT (one (file, stats) row per
-data file, written driver-side via Arrow — no Spark job) and manifests
-carry only ``base`` (the checkpoint ref) plus inline ``add``/``remove``
-deltas.  When the delta tail itself outgrows the knob, the commit
-compacts: resolves the full list and writes a fresh checkpoint.  So on
-a long-lived 100 TB table (10⁵–10⁶ files, thousands of commits) an
-append costs O(new files) JSON, a read costs one tiny JSON + one
-columnar checkpoint scan, and ``tt_history`` never parses a file list
-at all (``n_files`` rides in every manifest header).
+The log itself — its layout (``_log/`` manifests, parquet checkpoints,
+``files/<uuid>/`` data dirs), manifest bodies, read-side pruning and
+the commit protocol — lives in ``sources/tt_log.py``, shared with the
+``versioned_parquet`` data source.  This module is the Spark half:
+writing data files with Spark jobs, validating writes (schema, CHECK
+constraints, generated columns), computing skipping stats, and the
+``tt_*`` operator surface.  Log bytes move through a store: local
+roots use ``tt_log.ArrowStore``; Hadoop-only schemes (``s3a://``,
+``abfss://``, ``hdfs://``) use ``_HadoopStore`` over py4j.
 
 Concurrent-writer isolation is optimistic, Delta-style: the manifest is
-created with ``FileSystem.create(path, overwrite=False)`` — atomic
-put-if-absent on HDFS/local (object stores without atomic create need
-an external lock; same caveat Delta's S3 single-writer LogStore
-documents).  Two writers racing to commit version N: one wins, the
-loser gets ``ConcurrentWriteError`` and retries against the new state
-(``tt_append`` auto-retries — its file list is state-independent;
-delete/update/merge/OPTIMIZE-WHERE rebase with file-level conflict
-resolution via ``_publish_cow`` — Delta's WriteSerializable: writers
-on disjoint partitions both land, same-partition rewrites conflict;
-``tt_overwrite``/``tt_restore`` surface the conflict, because what they
-mean to replace has changed).
+published put-if-absent (``tt_log.publish``: ``os.link`` on local
+roots, rename-onto-absent on HDFS; object stores without atomic
+rename need an external lock — same caveat Delta's S3 single-writer
+LogStore documents).  Two writers racing to commit version N: one
+wins, the loser gets ``ConcurrentWriteError`` and retries against the
+new state (``tt_append`` auto-retries — its file list is
+state-independent; delete/update/merge/OPTIMIZE-WHERE rebase with
+file-level conflict resolution via ``tt_log.publish_cow`` — Delta's
+WriteSerializable: writers on disjoint partitions both land,
+same-partition rewrites conflict; ``tt_overwrite``/``tt_restore``
+surface the conflict, because what they mean to replace has changed).
 
 Scale: a manifest is O(files-in-version) JSON read once per query
 plan — the same cost profile as Delta's checkpointed log.  Reads pass
@@ -66,18 +47,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col as F_col
 
 from ..exceptions import AstroSparkError
-
-
-class ConcurrentWriteError(AstroSparkError):
-    """Another writer committed the version this writer raced for."""
+from ..exceptions import ConcurrentWriteError  # noqa: F401 - public here too
+from ..sources import tt_log
 
 
 class ConstraintViolationError(AstroSparkError):
     """A write carried rows that fail a table CHECK constraint."""
-
-
-_LOG = "_log"
-_PAD = 8
 
 
 def _named_root(spark: SparkSession, root: str) -> str:
@@ -100,247 +75,71 @@ def _fs(spark: SparkSession, root: str):
     return HPath, p, p.getFileSystem(hconf)
 
 
-def _manifest_name(version: int) -> str:
-    return f"v{version:0{_PAD}d}.json"
-
-
-def _is_external(entry: str) -> bool:
-    """Manifest file entries are root-relative (``files/<uuid>/...``)
-    EXCEPT for shallow-clone references, which are absolute paths/URIs
-    into another table's root.  External entries are readable but never
-    vacuum-deleted (they belong to the source table)."""
-    return entry.startswith("/") or "://" in entry
-
-
-def _abs(root: str, entry: str) -> str:
-    return entry if _is_external(entry) else f"{root.rstrip('/')}/{entry}"
-
-
-def _list_versions(fs, HPath, root: str) -> list[int]:
-    log = HPath(f"{root}/{_LOG}")
-    if not fs.exists(log):
-        return []
-    out = []
-    for st in fs.listStatus(log):
-        name = st.getPath().getName()
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                out.append(int(name[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _read_manifest(spark: SparkSession, fs, HPath, root: str, version: int) -> dict:
-    path = HPath(f"{root}/{_LOG}/{_manifest_name(version)}")
-    stream = fs.open(path)
-    try:
-        txt = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(txt)
-
-
-def _publish(
-    spark: SparkSession,
-    fs,
-    HPath,
-    root: str,
-    version: int,
-    manifest: dict,
-) -> None:
-    """Atomic put-if-absent of the version manifest — the commit point.
-
-    The manifest must appear atomically WITH its content (r14): the
-    former create(overwrite=False)-then-write claimed the slot
-    atomically but exposed a zero-length file to concurrent readers
-    until the JSON landed (a racing reader got JSONDecodeError — the
-    linearizability property test caught it), and a writer crash inside
-    the window would wedge the slot with an empty manifest.  Local
-    roots write a hidden temp file and ``os.link`` it into place
-    (link(2) fails EEXIST atomically; content is complete from the
-    first visible instant — same local/NFS scope as before).  Remote
-    filesystems write a temp and ``fs.rename`` (HDFS rename is atomic
-    and refuses an existing destination); object stores without atomic
+class _HadoopStore:
+    """``tt_log`` store over the JVM Hadoop filesystem — the path for
+    roots pyarrow cannot publish to.  ``create_exclusive`` writes a
+    hidden temp and renames it into place: HDFS rename is atomic and
+    refuses an existing destination; object stores without atomic
     rename need a coordination service, exactly Delta's contract."""
-    import os as _os
-    import uuid as _uuid
 
-    payload = json.dumps(manifest).encode("utf-8")
-    name = _manifest_name(version)
-    local = "://" not in root or root.startswith("file:")
-    if local:
-        lroot = root[5:] if root.startswith("file:") else root
-        lroot = lroot if lroot.startswith("/") else "/" + lroot
-        ldir = f"{lroot.rstrip('/')}/{_LOG}"
-        _os.makedirs(ldir, exist_ok=True)
-        tmp = f"{ldir}/.{name}.tmp-{_uuid.uuid4().hex}"
-        with open(tmp, "wb") as fh:
-            fh.write(payload)
+    def __init__(self, spark: SparkSession, root: str):
+        self.root = root
+        self._jvm = spark._jvm
+        self._HPath, _p, self._fs = _fs(spark, root)
+
+    def _path(self, rel: str):
+        return self._HPath(f"{self.root}/{rel}")
+
+    def list_names(self, rel: str) -> list[str]:
+        path = self._path(rel)
+        if not self._fs.exists(path):
+            return []
+        return [st.getPath().getName() for st in self._fs.listStatus(path)]
+
+    def read_bytes(self, rel: str) -> bytes:
+        stream = self._fs.open(self._path(rel))
         try:
-            _os.link(tmp, f"{ldir}/{name}")
-        except FileExistsError as exc:
-            raise ConcurrentWriteError(
-                f"version {version} was committed by another writer"
-            ) from exc
-        except OSError:
-            # Mounts without hard-link support (SMB/FAT/some FUSE) raise
-            # EPERM/ENOTSUP from link(2) (ADVICE r14): fall back to the
-            # old O_CREAT|O_EXCL open — the empty-file exposure window
-            # is the prior status quo on exactly those filesystems.
-            try:
-                fd = _os.open(
-                    f"{ldir}/{name}", _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY
-                )
-            except FileExistsError as exc:
-                raise ConcurrentWriteError(
-                    f"version {version} was committed by another writer"
-                ) from exc
-            try:
-                _os.write(fd, payload)
-            finally:
-                _os.close(fd)
+            return bytes(
+                self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+            )
         finally:
-            try:
-                _os.remove(tmp)
-            except OSError:
-                pass
-        return
-    log = HPath(f"{root}/{_LOG}")
-    fs.mkdirs(log)
-    tmp = HPath(f"{root}/{_LOG}/.{name}.tmp-{_uuid.uuid4().hex}")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(payload))
-    finally:
-        stream.close()
-    try:
-        renamed = fs.rename(tmp, HPath(f"{root}/{_LOG}/{name}"))
-    except Exception as exc:
-        fs.delete(tmp, False)
-        raise ConcurrentWriteError(
-            f"version {version} was committed by another writer"
-        ) from exc
-    if not renamed:
-        fs.delete(tmp, False)
-        raise ConcurrentWriteError(
-            f"version {version} was committed by another writer"
-        )
+            stream.close()
 
-
-def _tt_meta_of(m: dict) -> tuple:
-    """The table-metadata fields a rebased commit would silently
-    clobber if an interleaved commit changed them — read through the
-    NORMALIZED accessors (a v0 manifest stores stats_cols only
-    implicitly in its inline stats; later commits materialize the
-    header — a representation change, not a conflict) and compared as
-    canonical JSON so dict ordering never fakes one either."""
-    return (
-        json.dumps(m.get("schema"), sort_keys=True),
-        json.dumps(m.get("constraints") or {}, sort_keys=True),
-        json.dumps(sorted(_stats_cols_of(m))),
-        json.dumps(_partition_cols_of(m)),
-        json.dumps(_generated_cols_of(m) or {}, sort_keys=True),
-        json.dumps(m.get("properties") or {}, sort_keys=True),
-    )
-
-
-def _cow_extra(manifest: dict) -> dict:
-    """Schema + carried metadata for a copy-on-write commit, from the
-    snapshot the transaction read."""
-    return {
-        **(
-            {"schema": manifest["schema"]}
-            if manifest.get("schema") is not None
-            else {}
-        ),
-        **_carry_constraints(manifest),
-        **_carry_stats_cols(manifest),
-        **_carry_partition(manifest),
-        **_carry_generated(manifest),
-        **_carry_props(manifest),
-    }
-
-
-def _publish_cow(
-    spark: SparkSession,
-    fs,
-    HPath,
-    root: str,
-    head_v: int,
-    manifest: dict,
-    added: list[str],
-    removed: list[str],
-    added_stats: dict,
-    op: str,
-    extra: dict,
-    max_retries: int = 10,
-) -> int:
-    """Commit a copy-on-write rewrite (delete/update/merge/OPTIMIZE
-    WHERE) with Delta's WriteSerializable conflict resolution
-    (reference semantics: the Databricks backend's MERGEs are
-    serializable, ``databases/databricks/delta.py:357-442`` — Delta's
-    default isolation resolves conflicts at FILE granularity).
-
-    A lost ``_publish`` race does NOT automatically fail: the
-    transaction REBASES onto the new head and retries, succeeding iff
-
-    - no interleaved commit removed/rewrote any of THIS transaction's
-      target files (``removed``) — since partitioned tables write
-      partition-pure files, two writers scoped to disjoint partitions
-      always pass this check (partition-level conflict resolution falls
-      out of the file-level rule), while two writers rewriting the same
-      partition conflict and the loser raises; and
-    - no interleaved commit changed table metadata (schema,
-      constraints, layout, generated columns, properties).
-
-    Interleaved APPENDs always survive alongside this commit (their
-    files carry over through the rebased ``_body_delta``) — allowed
-    under WriteSerializable: the rewrite operates on its snapshot, the
-    append's rows were never in scope."""
-    base_meta = _tt_meta_of(manifest)
-    for _ in range(max_retries):
-        new_manifest = {
-            **_body_delta(
-                spark, fs, HPath, root, manifest, added, removed, added_stats
-            ),
-            "op": op,
-            "ts": time.time(),
-            **extra,
-        }
+    def write_bytes(self, rel: str, data: bytes) -> None:
+        path = self._path(rel)
+        self._fs.mkdirs(path.getParent())
+        stream = self._fs.create(path, True)
         try:
-            _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
-            return head_v + 1
-        except ConcurrentWriteError:
-            head_v, manifest = _head(spark, fs, HPath, root)
-            if _tt_meta_of(manifest) != base_meta:
-                raise ConcurrentWriteError(
-                    f"{op} on {root}: a concurrent commit changed table "
-                    "metadata (schema/constraints/layout/properties) — "
-                    "re-run against the new snapshot"
-                )
-            live, _s = _resolve(spark, fs, HPath, root, manifest)
-            live_set = set(live)
-            gone = [f for f in removed if f not in live_set]
-            if gone:
-                raise ConcurrentWriteError(
-                    f"{op} on {root}: a concurrent commit rewrote "
-                    f"{len(gone)} of this transaction's target files "
-                    f"(e.g. {gone[0]!r}) — overlapping partition/file "
-                    "conflict; re-run against the new snapshot"
-                )
-    raise ConcurrentWriteError(
-        f"{op} on {root} lost {max_retries} commit races"
-    )
+            stream.write(bytearray(data))
+        finally:
+            stream.close()
+
+    def create_exclusive(self, rel: str, data: bytes) -> None:
+        folder, _sep, name = rel.rpartition("/")
+        tmp_rel = f"{folder}/.{name}.tmp-{uuid.uuid4().hex}"
+        self.write_bytes(tmp_rel, data)
+        tmp = self._path(tmp_rel)
+        try:
+            renamed = self._fs.rename(tmp, self._path(rel))
+        except Exception as exc:
+            self._fs.delete(tmp, False)
+            raise FileExistsError(rel) from exc
+        if not renamed:
+            self._fs.delete(tmp, False)
+            raise FileExistsError(rel)
 
 
-# Hive-style layout prefix for engine-written partitioned commits: the
-# partition column is DUPLICATED into a `__p_<col>` path column before
-# partitionBy, so the real column stays physically in the data files
-# (reads remain plain explicit-file-list scans — no path inference, no
-# mixed-depth basePath conflicts) while files still split one-partition-
-# value-per-file, giving exact per-file [v, v] skipping bounds.
-_PART_PREFIX = "__p_"
+def _store(spark: SparkSession, root: str):
+    """The ``tt_log`` store for ``root``: local roots go through
+    pyarrow/os (no py4j round trips), everything else through Hadoop."""
+    if tt_log.local_path(root) is not None:
+        return tt_log.ArrowStore(root)
+    return _HadoopStore(spark, root)
+
+
+def _versions(spark: SparkSession, root: str) -> list[int]:
+    """Committed versions at ``root`` (empty: not a versioned table)."""
+    return tt_log.list_versions(_store(spark, root))
 
 
 def _write_data_files(
@@ -355,10 +154,11 @@ def _write_data_files(
     their root-relative paths.  Nothing references them until a manifest
     is published, so a crash here leaves invisible garbage only.  With
     ``partition_cols`` the layout splits per partition value via
-    ``__p_``-prefixed path columns (see ``_PART_PREFIX``)."""
+    ``__p_``-prefixed path columns (see ``tt_log.PART_PREFIX``)."""
     from pyspark.sql import functions as F
 
-    commit_dir = f"files/{uuid.uuid4().hex}"
+    commit_dir = tt_log.new_commit_dir()
+    prefix = tt_log.PART_PREFIX
     writer = df.write.mode("overwrite")
     if partition_cols:
         missing = [c for c in partition_cols if c not in df.columns]
@@ -371,12 +171,12 @@ def _write_data_files(
             df.select(
                 "*",
                 *[
-                    F.col(c).alias(f"{_PART_PREFIX}{c}")
+                    F.col(c).alias(f"{prefix}{c}")
                     for c in partition_cols
                 ],
             )
             .write.mode("overwrite")
-            .partitionBy(*[f"{_PART_PREFIX}{c}" for c in partition_cols])
+            .partitionBy(*[f"{prefix}{c}" for c in partition_cols])
         )
     writer.parquet(f"{root}/{commit_dir}")
     out: list[str] = []
@@ -434,7 +234,7 @@ def _file_stats(
 
     if not files or not stats_cols:
         return {}
-    df = spark.read.parquet(*[_abs(root, f) for f in files])
+    df = spark.read.parquet(*[tt_log.abs_path(root, f) for f in files])
     for c in stats_cols:
         t = df.schema[c].dataType.simpleString()
         if t not in _STATS_TYPES and not t.startswith("decimal"):
@@ -455,7 +255,7 @@ def _file_stats(
     def _norm(u: str) -> str:
         return u.removeprefix("file:").lstrip("/")
 
-    by_norm = {_norm(_abs(root, f)): f for f in files}
+    by_norm = {_norm(tt_log.abs_path(root, f)): f for f in files}
     out: dict = {}
     for r in rows:
         rel = by_norm.get(_norm(r["__f"]))
@@ -471,176 +271,17 @@ def _file_stats(
     return out
 
 
-def _carry_stats(manifest: dict, files: list[str], new_stats: dict) -> dict:
-    """Stats for a new manifest: carried-over files keep their recorded
-    ranges, new files contribute theirs; files with no stats are simply
-    absent (the reader keeps them — absence is never evidence)."""
-    old = manifest.get("stats") or {}
-    kept = {f: old[f] for f in files if f in old}
-    kept.update(new_stats)
-    return kept
-
-
 def _inline_max(spark: SparkSession) -> int:
     """File-count threshold above which the snapshot moves from inline
     JSON into a parquet checkpoint — Delta's checkpoint cadence knob."""
     try:
-        return int(spark.conf.get("spark.astro.tt.inlineFilesMax", "1000"))
-    except Exception:  # pragma: no cover - exotic conf backend
-        return 1000
-
-
-def _write_checkpoint(
-    spark: SparkSession, fs, HPath, root: str, files: list[str], stats: dict
-) -> str:
-    """Write the complete (file, stats) snapshot as a parquet checkpoint
-    under _log/ and return its root-relative ref.  Driver-side Arrow —
-    a log-maintenance write must not cost a Spark job.  The checkpoint
-    is invisible until a manifest referencing it publishes."""
-    import io
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rel = f"{_LOG}/ckpt-{uuid.uuid4().hex}.parquet"
-    table = pa.table(
-        {
-            "file": pa.array(files, type=pa.string()),
-            "stats": pa.array(
-                [json.dumps(stats[f]) if f in stats else None for f in files],
-                type=pa.string(),
-            ),
-        }
-    )
-    buf = io.BytesIO()
-    pq.write_table(table, buf)
-    fs.mkdirs(HPath(f"{root}/{_LOG}"))
-    stream = fs.create(HPath(f"{root}/{rel}"), False)
-    try:
-        stream.write(bytearray(buf.getvalue()))
-    finally:
-        stream.close()
-    return rel
-
-
-def _read_checkpoint(
-    spark: SparkSession, fs, HPath, root: str, rel: str
-) -> tuple[list[str], dict]:
-    import io
-
-    import pyarrow.parquet as pq
-
-    stream = fs.open(HPath(f"{root}/{rel}"))
-    try:
-        data = bytes(
-            spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+        return int(
+            spark.conf.get(
+                "spark.astro.tt.inlineFilesMax", str(tt_log.INLINE_MAX)
+            )
         )
-    finally:
-        stream.close()
-    t = pq.read_table(io.BytesIO(data))
-    files = t.column("file").to_pylist()
-    raw = t.column("stats").to_pylist()
-    stats = {f: json.loads(s) for f, s in zip(files, raw) if s is not None}
-    return files, stats
-
-
-def _resolve(
-    spark: SparkSession, fs, HPath, root: str, manifest: dict
-) -> tuple[list[str], dict]:
-    """(complete file list, per-file stats) of a manifest — inline form
-    verbatim; checkpoint form = base snapshot minus ``remove`` plus
-    ``add``.  One checkpoint read per plan, Delta's cost profile."""
-    if "base" not in manifest:
-        return manifest.get("files") or [], manifest.get("stats") or {}
-    files, stats = _read_checkpoint(spark, fs, HPath, root, manifest["base"])
-    rm = set(manifest.get("remove") or [])
-    if rm:
-        files = [f for f in files if f not in rm]
-        stats = {f: s for f, s in stats.items() if f not in rm}
-    files = files + (manifest.get("add") or [])
-    stats.update(manifest.get("add_stats") or {})
-    return files, stats
-
-
-def _body_full(
-    spark: SparkSession,
-    fs,
-    HPath,
-    root: str,
-    files: list[str],
-    stats: dict,
-) -> dict:
-    """File-list body for a commit whose COMPLETE snapshot is known
-    (create/overwrite/optimize, and compactions): inline while small,
-    checkpoint ref beyond the knob."""
-    if len(files) <= _inline_max(spark):
-        body: dict = {"files": files, "n_files": len(files)}
-        if stats:
-            body["stats"] = stats
-        return body
-    ref = _write_checkpoint(spark, fs, HPath, root, files, stats)
-    return {"base": ref, "add": [], "remove": [], "n_files": len(files)}
-
-
-def _body_delta(
-    spark: SparkSession,
-    fs,
-    HPath,
-    root: str,
-    prev: dict,
-    added: list[str],
-    removed: list[str],
-    added_stats: dict,
-) -> dict:
-    """File-list body for an incremental commit (append/merge/delete):
-    O(delta) JSON on a checkpointed table — prev's base carries over,
-    the delta tail grows by this commit's add/remove — compacting into
-    a fresh checkpoint only when the tail outgrows the knob."""
-    rm = set(removed)
-    if "base" in prev:
-        prev_add = prev.get("add") or []
-        add = [f for f in prev_add if f not in rm] + added
-        prev_add_set = set(prev_add)
-        remove = (prev.get("remove") or []) + [
-            f for f in removed if f not in prev_add_set
-        ]
-        n_files = int(prev["n_files"]) - len(removed) + len(added)
-        if len(add) + len(remove) <= _inline_max(spark):
-            add_set = set(add)
-            add_stats = {
-                f: s
-                for f, s in {**(prev.get("add_stats") or {}), **added_stats}.items()
-                if f in add_set
-            }
-            body: dict = {
-                "base": prev["base"],
-                "add": add,
-                "remove": remove,
-                "n_files": n_files,
-            }
-            if add_stats:
-                body["add_stats"] = add_stats
-            return body
-        files, stats = _resolve(spark, fs, HPath, root, prev)
-        files = [f for f in files if f not in rm] + added
-        stats = {f: s for f, s in stats.items() if f not in rm}
-        stats.update(added_stats)
-        return _body_full(spark, fs, HPath, root, files, stats)
-    kept = [f for f in (prev.get("files") or []) if f not in rm]
-    files = kept + added
-    stats = _carry_stats(prev, kept, added_stats)
-    return _body_full(spark, fs, HPath, root, files, stats)
-
-
-def _copy_body(manifest: dict) -> dict:
-    """The file-list body fields of an existing manifest, verbatim —
-    checkpoint refs are immutable, so RESTORE and metadata-only commits
-    may share them by reference."""
-    return {
-        k: manifest[k]
-        for k in ("files", "stats", "base", "add", "remove", "add_stats", "n_files")
-        if k in manifest
-    }
+    except Exception:  # pragma: no cover - exotic conf backend
+        return tt_log.INLINE_MAX
 
 
 def _schema_json(df: DataFrame) -> str:
@@ -660,23 +301,22 @@ def _evolved_schema(prev_json: str | None, df: DataFrame, merge_schema: bool) ->
 
     if prev_json is None:
         return _schema_json(df)
+    added, conflicts = tt_log.schema_drift(prev_json, _schema_json(df))
     prev = StructType.fromJson(json.loads(prev_json))
-    by_name = {f.name: f for f in prev.fields}
-    new_fields = [f for f in df.schema.fields if f.name not in by_name]
-    for f in df.schema.fields:
-        if f.name in by_name and by_name[f.name].dataType != f.dataType:
-            raise AstroSparkError(
-                f"schema conflict on column {f.name!r}: table has "
-                f"{by_name[f.name].dataType.simpleString()}, write has "
-                f"{f.dataType.simpleString()}"
-            )
-    if new_fields and not merge_schema:
+    if conflicts:
+        name = conflicts[0]
         raise AstroSparkError(
-            f"write adds columns {[f.name for f in new_fields]} not in the "
+            f"schema conflict on column {name!r}: table has "
+            f"{prev[name].dataType.simpleString()}, write has "
+            f"{df.schema[name].dataType.simpleString()}"
+        )
+    if added and not merge_schema:
+        raise AstroSparkError(
+            f"write adds columns {added} not in the "
             "table schema — pass merge_schema=True to evolve it"
         )
     return json.dumps(
-        StructType(prev.fields + new_fields).jsonValue()
+        StructType(prev.fields + [df.schema[n] for n in added]).jsonValue()
     )
 
 
@@ -719,8 +359,7 @@ def save_dataframe_versioned(
     ``tt_append``.  Returns the committed version."""
     if if_exists not in ("replace", "append"):
         raise ValueError(f"invalid if_exists: {if_exists!r}")
-    HPath, _p, fs = _fs(spark, target.root)
-    if not _list_versions(fs, HPath, target.root):
+    if not _versions(spark, target.root):
         return tt_create(
             spark,
             df,
@@ -764,8 +403,8 @@ def tt_create(
     ``ts``); a write that SUPPLIES the column must satisfy the
     expression or fails before publishing."""
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    if _list_versions(fs, HPath, root):
+    store = _store(spark, root)
+    if tt_log.list_versions(store):
         raise AstroSparkError(f"versioned table already exists at {root}")
     partition_by = list(partition_by or [])
     header = {
@@ -784,6 +423,7 @@ def tt_create(
             raise AstroSparkError(
                 f"partition_by column {c!r} not in the DataFrame"
             )
+    HPath, _p, fs = _fs(spark, root)
     files = _write_data_files(
         spark, df, root, fs, HPath, partition_cols=partition_by
     )
@@ -791,13 +431,13 @@ def tt_create(
         spark, root, files, header, df
     ) if (stats_cols or partition_by) else {}
     manifest = {
-        **_body_full(spark, fs, HPath, root, files, stats),
+        **tt_log.body_full(store, files, stats, _inline_max(spark)),
         "op": "create",
         "ts": time.time(),
         "schema": _schema_json(df),
         **header,
     }
-    _publish(spark, fs, HPath, root, 0, manifest)
+    tt_log.publish(store, 0, manifest)
     return 0
 
 
@@ -818,14 +458,8 @@ def _check_constraints(df: DataFrame, manifest: dict, what: str) -> None:
             )
 
 
-def _carry_constraints(manifest: dict) -> dict:
-    c = manifest.get("constraints")
-    return {"constraints": c} if c else {}
 
 
-def _carry_props(manifest: dict) -> dict:
-    p = manifest.get("properties")
-    return {"properties": p} if p else {}
 
 
 def tt_add_constraint(
@@ -837,8 +471,8 @@ def tt_add_constraint(
     every later append/merge/overwrite must satisfy it or fails before
     publishing."""
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
+    store = _store(spark, root)
+    head_v, manifest = tt_log.head(store)
     if name in (manifest.get("constraints") or {}):
         raise AstroSparkError(f"constraint {name!r} already exists")
     trial = {**manifest, "constraints": {name: expr}}
@@ -849,15 +483,15 @@ def tt_add_constraint(
         "ts": time.time(),
         "constraints": {**(manifest.get("constraints") or {}), name: expr},
     }
-    _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
+    tt_log.publish(store, head_v + 1, new_manifest)
     return head_v + 1
 
 
 def tt_drop_constraint(spark: SparkSession, root: str, name: str) -> int:
     """Delta ``ALTER TABLE ... DROP CONSTRAINT``: metadata-only commit."""
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
+    store = _store(spark, root)
+    head_v, manifest = tt_log.head(store)
     cons = dict(manifest.get("constraints") or {})
     if name not in cons:
         raise AstroSparkError(f"constraint {name!r} does not exist")
@@ -870,7 +504,7 @@ def tt_drop_constraint(spark: SparkSession, root: str, name: str) -> int:
     new_manifest.pop("constraints", None)
     if cons:
         new_manifest["constraints"] = cons
-    _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
+    tt_log.publish(store, head_v + 1, new_manifest)
     return head_v + 1
 
 
@@ -889,8 +523,8 @@ def tt_add_columns(
     root = _named_root(spark, root)
     if not columns:
         raise ValueError("tt_add_columns: no columns given")
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
+    store = _store(spark, root)
+    head_v, manifest = tt_log.head(store)
     if manifest.get("schema") is None:
         raise AstroSparkError(
             "tt_add_columns: pre-schema-log table — commit a write "
@@ -916,7 +550,7 @@ def tt_add_columns(
             StructType(prev.fields + new_fields).jsonValue()
         ),
     }
-    _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
+    tt_log.publish(store, head_v + 1, new_manifest)
     return head_v + 1
 
 
@@ -930,8 +564,8 @@ def tt_set_properties(
     root = _named_root(spark, root)
     if not props:
         raise ValueError("tt_set_properties: empty property map")
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
+    store = _store(spark, root)
+    head_v, manifest = tt_log.head(store)
     merged = {**(manifest.get("properties") or {})}
     merged.update({str(k): str(v) for k, v in props.items()})
     new_manifest = {
@@ -940,7 +574,7 @@ def tt_set_properties(
         "ts": time.time(),
         "properties": merged,
     }
-    _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
+    tt_log.publish(store, head_v + 1, new_manifest)
     return head_v + 1
 
 
@@ -951,8 +585,8 @@ def tt_unset_properties(
     commit dropping the keys (missing keys are ignored, Delta's IF
     EXISTS behavior)."""
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
+    store = _store(spark, root)
+    head_v, manifest = tt_log.head(store)
     props = {
         k: v
         for k, v in (manifest.get("properties") or {}).items()
@@ -966,123 +600,35 @@ def tt_unset_properties(
     new_manifest.pop("properties", None)
     if props:
         new_manifest["properties"] = props
-    _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
+    tt_log.publish(store, head_v + 1, new_manifest)
     return head_v + 1
 
 
 def tt_properties(spark: SparkSession, root: str) -> dict[str, str]:
     """The head version's table-property map (empty if none set)."""
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    _v, manifest = _head(spark, fs, HPath, root)
+    _v, manifest = tt_log.head(_store(spark, root))
     return dict(manifest.get("properties") or {})
 
 
-def _stats_cols_of(manifest: dict) -> list[str]:
-    """The column set this table records skipping stats for — the
-    ``stats_cols`` header when present (checkpointed logs never need a
-    file-list read to learn it), else inferred from inline stats for
-    pre-header manifests."""
-    cols = manifest.get("stats_cols")
-    if cols:
-        return list(cols)
-    old = manifest.get("stats") or {}
-    return sorted({c for st in old.values() for c in st})
 
 
-def _carry_stats_cols(manifest: dict) -> dict:
-    cols = _stats_cols_of(manifest)
-    return {"stats_cols": cols} if cols else {}
 
 
-def _partition_cols_of(manifest: dict) -> list[str]:
-    """The table's partition columns (empty for unpartitioned tables).
-    Partition values are first-class data everywhere EXCEPT adopted
-    (``tt_convert``) Hive files, where they live only in paths."""
-    return list(manifest.get("partition_cols") or [])
 
 
-def _carry_partition(manifest: dict) -> dict:
-    p = manifest.get("partition_cols")
-    return {"partition_cols": list(p)} if p else {}
 
 
-def _typed_partition_value(raw: str):
-    """A Hive path value parsed the way Spark's partition inference
-    would for the common types (int, float, else string); the Hive
-    null sentinel yields None (no skipping bound — absence is never
-    evidence)."""
-    from urllib.parse import unquote
-
-    v = unquote(raw)
-    if v == "__HIVE_DEFAULT_PARTITION__":
-        return None
-    try:
-        return int(v)
-    except ValueError:
-        pass
-    try:
-        return float(v)
-    except ValueError:
-        return v
 
 
-def _partition_values(rel: str, partition_cols: list[str]) -> dict:
-    """{col: typed value} parsed from a file's ``key=value`` (adopted
-    Hive layout) or ``__p_key=value`` (engine layout) path segments."""
-    pset = set(partition_cols)
-    out: dict = {}
-    for seg in rel.split("/")[:-1]:
-        k, sep, v = seg.partition("=")
-        if not sep:
-            continue
-        if k.startswith(_PART_PREFIX):
-            k = k[len(_PART_PREFIX):]
-        if k in pset:
-            out[k] = _typed_partition_value(v)
-    return out
 
 
-def _partition_path_stats(files: list[str], partition_cols: list[str]) -> dict:
-    """Degenerate per-file [v, v] skipping bounds from path segments —
-    a partition value IS a min==max range, so ``tt_read(where=)`` and
-    ``skip_by`` prune partitions through the ordinary stats machinery
-    with zero extra scans."""
-    out: dict = {}
-    for f in files:
-        vals = _partition_values(f, partition_cols)
-        entry = {c: [v, v] for c, v in vals.items() if v is not None}
-        if entry:
-            out[f] = entry
-    return out
 
 
-def _path_valued(rel: str, partition_cols: list[str]) -> bool:
-    """True when this file's partition values exist ONLY in its path —
-    an adopted Hive file (raw ``<col>=`` segment).  Engine-written
-    files use ``__p_``-prefixed segments and keep the columns in the
-    data, so they read through the ordinary explicit-file-list scan."""
-    if _is_external(rel):
-        return False
-    pset = set(partition_cols)
-    for seg in rel.split("/")[:-1]:
-        k, sep, _v = seg.partition("=")
-        if sep and k in pset:
-            return True
-    return False
 
 
-def _generated_cols_of(manifest: dict) -> dict:
-    """{col: spark-sql expr} of the table's GENERATED columns (Delta's
-    ``GENERATED ALWAYS AS``) — typically the partition column of a
-    time-partitioned table (``day = date_trunc('DAY', ts)``), so
-    ingest never has to pre-derive it."""
-    return dict(manifest.get("generated_cols") or {})
 
 
-def _carry_generated(manifest: dict) -> dict:
-    g = manifest.get("generated_cols")
-    return {"generated_cols": dict(g)} if g else {}
 
 
 def _require_generated_present(df: DataFrame, manifest: dict, what: str) -> None:
@@ -1090,7 +636,7 @@ def _require_generated_present(df: DataFrame, manifest: dict, what: str) -> None
     the fact — a generated column missing from them would read back
     NULL and silently break the generation invariant, so refuse."""
     missing = [
-        c for c in _generated_cols_of(manifest) if c not in df.columns
+        c for c in tt_log.generated_cols_of(manifest) if c not in df.columns
     ]
     if missing:
         raise AstroSparkError(
@@ -1106,7 +652,7 @@ def _apply_generated(df: DataFrame, manifest: dict) -> DataFrame:
     against the expression later (``_check_generated``)."""
     from pyspark.sql import functions as F
 
-    for name, expr in _generated_cols_of(manifest).items():
+    for name, expr in tt_log.generated_cols_of(manifest).items():
         if name not in df.columns:
             df = df.withColumn(name, F.expr(expr))
     return df
@@ -1119,7 +665,7 @@ def _check_generated(df: DataFrame, manifest: dict, what: str) -> None:
     version."""
     from pyspark.sql import functions as F
 
-    for name, expr in _generated_cols_of(manifest).items():
+    for name, expr in tt_log.generated_cols_of(manifest).items():
         if name not in df.columns:
             continue
         bad = (
@@ -1147,8 +693,8 @@ def _new_file_stats(
     column-pruned scan covers both; partition columns of types the
     stats machinery doesn't order (date, boolean, ...) are skipped
     quietly (no bounds → never pruned — sound)."""
-    pcols = _partition_cols_of(manifest)
-    want = list(_stats_cols_of(manifest))
+    pcols = tt_log.partition_cols_of(manifest)
+    want = list(tt_log.stats_cols_of(manifest))
     want += [c for c in pcols if c not in want]
     scan: list[str] = []
     for c in want:
@@ -1179,25 +725,21 @@ def tt_append(
     df's new columns (old files read the new columns as NULL); without
     it, new columns are rejected — Delta's mergeSchema contract."""
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
-    if not versions:
-        raise AstroSparkError(f"no versioned table at {root}")
+    store = _store(spark, root)
     # partition columns are immutable table metadata (no ALTER): one
-    # head read decides the write layout, the retry loop re-reads only
-    # the racing file-list state
-    head_m = _read_manifest(spark, fs, HPath, root, versions[-1])
-    pcols = _partition_cols_of(head_m)
+    # head read decides the write layout, the commit's retry loop
+    # re-reads only the racing file-list state
+    _v, head_m = tt_log.head(store)
+    pcols = tt_log.partition_cols_of(head_m)
     df = _apply_generated(df, head_m)
+    HPath, _p, fs = _fs(spark, root)
     new_files = _write_data_files(
         spark, df, root, fs, HPath, partition_cols=pcols
     )
-    for _ in range(max_retries):
-        versions = _list_versions(fs, HPath, root)
-        if not versions:
+
+    def prepare(prev: dict | None) -> tuple[str, dict]:
+        if prev is None:
             raise AstroSparkError(f"no versioned table at {root}")
-        head = versions[-1]
-        prev = _read_manifest(spark, fs, HPath, root, head)
         evolved = _evolved_schema(prev.get("schema"), df, merge_schema)
         # validate the ACTUAL written rows (the tt_merge pattern), not the
         # caller's lazy df: a nondeterministic df (rand() sampling,
@@ -1214,25 +756,10 @@ def tt_append(
         # legitimately missing table columns (they read back as NULL)
         # must not crash the stats scan; absent per-file stats are
         # already treated as "keep" by the skip_by reader
-        new_stats = _new_file_stats(spark, root, new_files, prev, df)
-        manifest = {
-            **_body_delta(spark, fs, HPath, root, prev, new_files, [], new_stats),
-            "op": "append",
-            "ts": time.time(),
-            "schema": evolved,
-            **_carry_constraints(prev),
-            **_carry_stats_cols(prev),
-            **_carry_partition(prev),
-            **_carry_generated(prev),
-            **_carry_props(prev),
-        }
-        try:
-            _publish(spark, fs, HPath, root, head + 1, manifest)
-            return head + 1
-        except ConcurrentWriteError:
-            continue
-    raise ConcurrentWriteError(
-        f"append to {root} lost {max_retries} commit races"
+        return evolved, _new_file_stats(spark, root, new_files, prev, df)
+
+    return tt_log.commit(
+        store, new_files, "append", prepare, _inline_max(spark), max_retries
     )
 
 
@@ -1255,71 +782,33 @@ def tt_commit_files(
     if mode not in ("append", "overwrite"):
         raise ValueError(f"tt_commit_files: invalid mode {mode!r}")
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
     if not new_files:
         raise ValueError("tt_commit_files: no files to commit")
-    df = spark.read.parquet(*[_abs(root, f) for f in new_files])
-    versions = _list_versions(fs, HPath, root)
-    if not versions:
-        manifest = {
-            **_body_full(spark, fs, HPath, root, sorted(new_files), {}),
-            "op": "create",
-            "ts": time.time(),
-            "schema": _schema_json(df),
-        }
-        _publish(spark, fs, HPath, root, 0, manifest)
-        return 0
-    if mode == "overwrite":
-        prev = _read_manifest(spark, fs, HPath, root, versions[-1])
+    files = sorted(new_files)
+    df = spark.read.parquet(*[tt_log.abs_path(root, f) for f in files])
+
+    def prepare(prev: dict | None) -> tuple[str, dict]:
+        if prev is None:
+            return _schema_json(df), {}
         _require_generated_present(df, prev, "tt_commit_files")
-        _check_constraints(df, prev, "overwrite")
-        _check_generated(df, prev, "overwrite")
-        stats = _new_file_stats(spark, root, sorted(new_files), prev, df)
-        manifest = {
-            **_body_full(spark, fs, HPath, root, sorted(new_files), stats),
-            "op": "overwrite",
-            "ts": time.time(),
-            "schema": _schema_json(df),
-            **_carry_constraints(prev),
-            **_carry_stats_cols(prev),
-            **_carry_partition(prev),
-            **_carry_generated(prev),
-            **_carry_props(prev),
-        }
-        _publish(spark, fs, HPath, root, versions[-1] + 1, manifest)
-        return versions[-1] + 1
-    for _ in range(max_retries):
-        versions = _list_versions(fs, HPath, root)
-        head = versions[-1]
-        prev = _read_manifest(spark, fs, HPath, root, head)
-        _require_generated_present(df, prev, "tt_commit_files")
+        if mode == "overwrite":
+            _check_constraints(df, prev, "overwrite")
+            _check_generated(df, prev, "overwrite")
+            return (
+                _schema_json(df),
+                _new_file_stats(spark, root, files, prev, df),
+            )
         evolved = _evolved_schema(prev.get("schema"), df, False)
         committed = _read_files(
-            spark, root, {"files": sorted(new_files), "schema": evolved}
+            spark, root, {"files": files, "schema": evolved}
         )
         _check_constraints(committed, prev, "append")
         _check_generated(committed, prev, "append")
-        new_stats = _new_file_stats(spark, root, sorted(new_files), prev, df)
-        manifest = {
-            **_body_delta(
-                spark, fs, HPath, root, prev, sorted(new_files), [], new_stats
-            ),
-            "op": "append",
-            "ts": time.time(),
-            "schema": evolved,
-            **_carry_constraints(prev),
-            **_carry_stats_cols(prev),
-            **_carry_partition(prev),
-            **_carry_generated(prev),
-            **_carry_props(prev),
-        }
-        try:
-            _publish(spark, fs, HPath, root, head + 1, manifest)
-            return head + 1
-        except ConcurrentWriteError:
-            continue
-    raise ConcurrentWriteError(
-        f"commit to {root} lost {max_retries} commit races"
+        return evolved, _new_file_stats(spark, root, files, prev, df)
+
+    return tt_log.commit(
+        _store(spark, root), files, mode, prepare, _inline_max(spark),
+        max_retries,
     )
 
 
@@ -1335,15 +824,13 @@ def tt_overwrite(
     table's existing partition layout; a list (possibly empty) replaces
     it — Delta's ``CREATE OR REPLACE ... PARTITIONED BY`` re-layout."""
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
-    if not versions:
-        raise AstroSparkError(f"no versioned table at {root}")
-    prev = _read_manifest(spark, fs, HPath, root, versions[-1])
+    store = _store(spark, root)
+    head_v, prev = tt_log.head(store)
     pcols = (
-        _partition_cols_of(prev) if partition_by is None else list(partition_by)
+        tt_log.partition_cols_of(prev) if partition_by is None else list(partition_by)
     )
     df = _apply_generated(df, prev)
+    HPath, _p, fs = _fs(spark, root)
     files = _write_data_files(spark, df, root, fs, HPath, partition_cols=pcols)
     # validate the ACTUAL written rows (tt_merge pattern) — the files are
     # still invisible, so a rejected overwrite leaves garbage, never a
@@ -1354,22 +841,22 @@ def tt_overwrite(
     _check_constraints(written, prev, "overwrite")
     _check_generated(written, prev, "overwrite")
     header = {
-        **_carry_stats_cols(prev),
+        **tt_log.carry_stats_cols(prev),
         **({"partition_cols": pcols} if pcols else {}),
-        **_carry_generated(prev),
+        **tt_log.carry_generated(prev),
     }
     stats = _new_file_stats(spark, root, files, header, df)
     manifest = {
-        **_body_full(spark, fs, HPath, root, files, stats),
+        **tt_log.body_full(store, files, stats, _inline_max(spark)),
         "op": "overwrite",
         "ts": time.time(),
         "schema": _schema_json(df),  # overwrite replaces the schema too
-        **_carry_constraints(prev),
+        **tt_log.carry_constraints(prev),
         **header,
-        **_carry_props(prev),
+        **tt_log.carry_props(prev),
     }
-    _publish(spark, fs, HPath, root, versions[-1] + 1, manifest)
-    return versions[-1] + 1
+    tt_log.publish(store, head_v + 1, manifest)
+    return head_v + 1
 
 
 def _skip_bounds_from_predicate(where: str) -> dict:
@@ -1489,55 +976,8 @@ def _skip_bounds_from_predicate(where: str) -> dict:
     return {c: (lo, hi) for c, (lo, hi) in out.items()}
 
 
-def _parse_temporal(s):
-    """datetime for a canonical date/timestamp string, else None."""
-    from datetime import datetime
-
-    if not isinstance(s, str):
-        return None
-    try:
-        return datetime.fromisoformat(s)
-    except ValueError:
-        return None
 
 
-def _skip_provable(rng, lo, hi) -> bool:
-    """True iff a file's recorded [rng] provably cannot intersect
-    [lo, hi].  Temporal bounds (stats store date/timestamp ranges as
-    their canonical strings) compare in TIME space — a lexicographic
-    compare would mis-prune against shorter or non-canonical predicate
-    literals ('2024-03-01' vs '2024-03-01 00:00:00'); a predicate
-    literal that doesn't parse proves nothing on its side (the file is
-    kept — sound)."""
-    r0, r1 = rng[0], rng[1]
-    t0, t1 = _parse_temporal(r0), _parse_temporal(r1)
-    if t0 is not None and t1 is not None:
-        # offset-aware vs naive datetimes (e.g. a manifest written by
-        # an older Arrow commit that serialized '+00:00' bounds, read
-        # against a naive predicate literal) raise TypeError on <:
-        # proves nothing — keep the file (sound)
-        try:
-            if hi is not None:
-                th = _parse_temporal(hi)
-                if th is not None and t0 > th:
-                    return True
-            if lo is not None:
-                tl = _parse_temporal(lo)
-                if tl is not None and t1 < tl:
-                    return True
-        except TypeError:
-            return False
-        return False
-    try:
-        if hi is not None and r0 > hi:
-            return True
-        if lo is not None and r1 < lo:
-            return True
-    except TypeError:
-        # cross-type bound (e.g. a string literal against numeric
-        # stats, where SQL would cast): can't prove skippable
-        return False
-    return False
 
 
 def tt_read(
@@ -1568,29 +1008,12 @@ def tt_read(
     Delta's stats-based skipping without hand-passing ``skip_by``.
     Explicit ``skip_by`` bounds intersect with the derived ones."""
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
-    if not versions:
-        raise AstroSparkError(f"no versioned table at {root}")
     if version is not None and as_of_ts is not None:
         raise ValueError("tt_read: pass at most one of version / as_of_ts")
-    if version is None and as_of_ts is None:
-        version = versions[-1]
-    elif as_of_ts is not None:
-        eligible = [
-            v
-            for v in versions
-            if _read_manifest(spark, fs, HPath, root, v)["ts"] <= as_of_ts
-        ]
-        if not eligible:
-            raise AstroSparkError(
-                f"no version at or before ts={as_of_ts} in {root}"
-            )
-        version = eligible[-1]
-    if version not in versions:
-        raise AstroSparkError(f"version {version} not found in {root}")
-    manifest = _read_manifest(spark, fs, HPath, root, version)
-    files, stats = _resolve(spark, fs, HPath, root, manifest)
+    store = _store(spark, root)
+    version = tt_log.pick_version(store, version, as_of_ts)
+    manifest = tt_log.read_manifest(store, version)
+    files, stats = tt_log.resolve(store, manifest)
     if where is not None:
         derived = _skip_bounds_from_predicate(where)
         merged = dict(skip_by or {})
@@ -1603,20 +1026,7 @@ def tt_read(
             merged[col] = (cur_lo, cur_hi)
         skip_by = merged or None
     if skip_by:
-
-        def _keep(f: str) -> bool:
-            st = stats.get(f)
-            if st is None:
-                return True
-            for col, (lo, hi) in skip_by.items():
-                rng = st.get(col)
-                if rng is None or rng[0] is None or rng[1] is None:
-                    continue  # no/NULL-only stats: can't prove skippable
-                if _skip_provable(rng, lo, hi):
-                    return False
-            return True
-
-        files = [f for f in files if _keep(f)]
+        files = tt_log.prune(files, stats, skip_by)
 
     def _finish(df: DataFrame) -> DataFrame:
         return df.where(where) if where is not None else df
@@ -1633,7 +1043,7 @@ def tt_read(
     # from their paths (_read_file_lists)
     return _finish(
         _read_file_lists(
-            spark, root, files, schema_json, _partition_cols_of(manifest)
+            spark, root, files, schema_json, tt_log.partition_cols_of(manifest)
         )
     )
 
@@ -1643,31 +1053,21 @@ def tt_restore(spark: SparkSession, root: str, version: int) -> int:
     given version's (Delta ``RESTORE TABLE ... TO VERSION AS OF``) —
     history is preserved, nothing is deleted."""
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
+    store = _store(spark, root)
+    versions = tt_log.list_versions(store)
     if version not in versions:
         raise AstroSparkError(f"version {version} not found in {root}")
-    src = _read_manifest(spark, fs, HPath, root, version)
+    src = tt_log.read_manifest(store, version)
     # the file-list body copies verbatim — checkpoint refs are immutable,
-    # so restoring a checkpointed version shares its base by reference
+    # so restoring a checkpointed version shares its base by reference;
+    # the schema, checks and layout headers are restored too
     manifest = {
-        **_copy_body(src),
+        **tt_log.copy_body(src),
         "op": f"restore(v{version})",
         "ts": time.time(),
+        **tt_log.copy_headers(src),
     }
-    if src.get("schema") is not None:
-        manifest["schema"] = src["schema"]  # restore the schema too
-    if src.get("constraints") is not None:
-        manifest["constraints"] = src["constraints"]  # and the checks
-    if src.get("stats_cols") is not None:
-        manifest["stats_cols"] = src["stats_cols"]
-    if src.get("partition_cols") is not None:
-        manifest["partition_cols"] = src["partition_cols"]
-    if src.get("generated_cols") is not None:
-        manifest["generated_cols"] = src["generated_cols"]
-    if src.get("properties") is not None:
-        manifest["properties"] = src["properties"]
-    _publish(spark, fs, HPath, root, versions[-1] + 1, manifest)
+    tt_log.publish(store, versions[-1] + 1, manifest)
     return versions[-1] + 1
 
 
@@ -1675,17 +1075,8 @@ def tt_restore_to_ts(spark: SparkSession, root: str, as_of_ts: float) -> int:
     """RESTORE to the latest version committed at or before the given
     unix timestamp — Delta ``RESTORE TABLE ... TO TIMESTAMP AS OF``."""
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    eligible = [
-        v
-        for v in _list_versions(fs, HPath, root)
-        if _read_manifest(spark, fs, HPath, root, v)["ts"] <= as_of_ts
-    ]
-    if not eligible:
-        raise AstroSparkError(
-            f"no version at or before ts={as_of_ts} in {root}"
-        )
-    return tt_restore(spark, root, eligible[-1])
+    version = tt_log.pick_version(_store(spark, root), as_of_ts=as_of_ts)
+    return tt_restore(spark, root, version)
 
 
 def tt_convert(
@@ -1716,18 +1107,19 @@ def tt_convert(
     Refuses an already-versioned root, an empty directory, and a
     layout whose files disagree on the partition column set."""
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    if _list_versions(fs, HPath, root):
+    store = _store(spark, root)
+    if tt_log.list_versions(store):
         raise AstroSparkError(
             f"tt_convert: {root} is already a versioned table"
         )
+    HPath, _p, fs = _fs(spark, root)
     files: list[str] = []
 
     def _walk(path, rel_prefix: str) -> None:
         for st in fs.listStatus(path):
             name = st.getPath().getName()
             if st.isDirectory():
-                if name == _LOG:
+                if name == tt_log.LOG:
                     continue
                 _walk(st.getPath(), f"{rel_prefix}{name}/")
             elif name.endswith(".parquet"):
@@ -1778,22 +1170,22 @@ def tt_convert(
         if len(files) >= _dir_compact_min(spark)
         else files
     )
-    abs_files = [_abs(root, f) for f in paths]
+    abs_files = [tt_log.abs_path(root, f) for f in paths]
     if pcols:
         # basePath materializes the partition columns (and their
         # inferred types) into the adopted schema
         df = spark.read.option("basePath", root).parquet(*abs_files)
     else:
         df = spark.read.parquet(*abs_files)
-    stats = _partition_path_stats(files, pcols) if pcols else {}
+    stats = tt_log.partition_path_stats(files, pcols) if pcols else {}
     manifest = {
-        **_body_full(spark, fs, HPath, root, files, stats),
+        **tt_log.body_full(store, files, stats, _inline_max(spark)),
         "op": "convert",
         "ts": time.time(),
         "schema": _schema_json(df),
         **({"partition_cols": pcols} if pcols else {}),
     }
-    _publish(spark, fs, HPath, root, 0, manifest)
+    tt_log.publish(store, 0, manifest)
     return 0
 
 
@@ -1811,18 +1203,17 @@ def tt_detail(spark: SparkSession, root: str) -> DataFrame:
     import os as _os
 
     root = _named_root(spark, root)
+    store = _store(spark, root)
+    head_v, manifest = tt_log.head(store)
+    files, _stats = tt_log.resolve(store, manifest)
     HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
-    files, _stats = _resolve(spark, fs, HPath, root, manifest)
     size = 0
-    local = "://" not in root or root.startswith("file:")
     for f in files:
-        ab = _abs(root, f)
-        if local:
-            p = ab[5:].lstrip("/") if ab.startswith("file:") else ab
-            p = p if p.startswith("/") else "/" + p
+        ab = tt_log.abs_path(root, f)
+        local = tt_log.local_path(ab)
+        if local is not None:
             try:
-                size += _os.stat(p).st_size
+                size += _os.stat(local).st_size
             except OSError:
                 pass  # vacuumed/external path: counts zero, like exists()
         else:
@@ -1840,9 +1231,9 @@ def tt_detail(spark: SparkSession, root: str) -> DataFrame:
                 size,
                 float(manifest.get("ts") or 0.0),
                 json.dumps(manifest.get("constraints") or {}),
-                list(_stats_cols_of(manifest)),
+                list(tt_log.stats_cols_of(manifest)),
                 json.dumps(manifest.get("properties") or {}),
-                list(_partition_cols_of(manifest)),
+                list(tt_log.partition_cols_of(manifest)),
             )
         ],
         "format string, location string, version long, num_files long, "
@@ -1907,18 +1298,18 @@ def tt_history(spark: SparkSession, root: str) -> DataFrame:
     """(version, op, ts, n_files) per committed version — Delta
     ``DESCRIBE HISTORY``."""
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
+    store = _store(spark, root)
     rows = [
         (
             v,
-            (m := _read_manifest(spark, fs, HPath, root, v))["op"],
+            (m := tt_log.read_manifest(store, v))["op"],
             float(m["ts"]),
             # header-only: n_files rides in every manifest, so history
             # never parses (or fetches) a file list — O(versions) tiny
             # JSON reads even on a checkpointed million-file table
             int(m.get("n_files", len(m.get("files") or []))),
         )
-        for v in _list_versions(fs, HPath, root)
+        for v in tt_log.list_versions(store)
     ]
     return _literal_rows_df(
         spark, rows, "version long, op string, ts double, n_files long"
@@ -1979,7 +1370,7 @@ def _compact_paths(
         if not d or len(members) < 2:
             out.extend(members)
             continue
-        ab = _abs(root, d)
+        ab = tt_log.abs_path(root, d)
         loc = _local(ab)
         try:
             if loc is not None:
@@ -2039,7 +1430,7 @@ def _read_file_lists(
             raise AstroSparkError("no data files and no schema to serve")
         return spark.createDataFrame([], schema)
     adopted = (
-        [f for f in files if _path_valued(f, partition_cols)]
+        [f for f in files if tt_log.path_valued(f, partition_cols)]
         if partition_cols
         else []
     )
@@ -2057,7 +1448,7 @@ def _read_file_lists(
             else plain
         )
         r = spark.read if schema is None else spark.read.schema(schema)
-        parts.append(r.parquet(*[_abs(root, f) for f in paths]))
+        parts.append(r.parquet(*[tt_log.abs_path(root, f) for f in paths]))
     if adopted:
         paths = (
             _compact_paths(spark, root, adopted)
@@ -2067,7 +1458,7 @@ def _read_file_lists(
         r = spark.read.option("basePath", root)
         if schema is not None:
             r = r.schema(schema)
-        parts.append(r.parquet(*[_abs(root, f) for f in paths]))
+        parts.append(r.parquet(*[tt_log.abs_path(root, f) for f in paths]))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -2082,8 +1473,7 @@ def _read_files(spark: SparkSession, root: str, manifest: dict) -> DataFrame:
     for PARTITIONED tables must carry ``partition_cols`` so adopted
     files materialize their path values)."""
     if "base" in manifest:
-        HPath, _p, fs = _fs(spark, root)
-        files, _stats = _resolve(spark, fs, HPath, root, manifest)
+        files, _stats = tt_log.resolve(_store(spark, root), manifest)
     else:
         files = manifest.get("files") or []
     return _read_file_lists(
@@ -2091,15 +1481,8 @@ def _read_files(spark: SparkSession, root: str, manifest: dict) -> DataFrame:
         root,
         files,
         manifest.get("schema"),
-        _partition_cols_of(manifest),
+        tt_log.partition_cols_of(manifest),
     )
-
-
-def _head(spark: SparkSession, fs, HPath, root: str) -> tuple[int, dict]:
-    versions = _list_versions(fs, HPath, root)
-    if not versions:
-        raise AstroSparkError(f"no versioned table at {root}")
-    return versions[-1], _read_manifest(spark, fs, HPath, root, versions[-1])
 
 
 def _touched_relative(
@@ -2107,7 +1490,7 @@ def _touched_relative(
 ) -> list[str]:
     """Map a DISTINCT input_file_name() relation back to root-relative
     manifest paths.  Bounded collect: at most len(files) rows."""
-    abs_by_rel = {f: _abs(root, f) for f in files}
+    abs_by_rel = {f: tt_log.abs_path(root, f) for f in files}
     hit = {r[0] for r in flagged.limit(len(files) + 1).collect()}
 
     def _norm(u: str) -> str:
@@ -2131,9 +1514,10 @@ def tt_delete_where(spark: SparkSession, root: str, predicate: str) -> int:
     from pyspark.sql import functions as F
 
     root = _named_root(spark, root)
+    store = _store(spark, root)
+    head_v, manifest = tt_log.head(store)
+    files, _stats = tt_log.resolve(store, manifest)
     HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
-    files, _stats = _resolve(spark, fs, HPath, root, manifest)
     full = _read_files(spark, root, manifest)
     flagged = (
         full.where(predicate)
@@ -2143,7 +1527,7 @@ def tt_delete_where(spark: SparkSession, root: str, predicate: str) -> int:
     touched = _touched_relative(spark, root, files, flagged)
     if not touched:
         return head_v  # nothing matched: no new version
-    pcols = _partition_cols_of(manifest)
+    pcols = tt_log.partition_cols_of(manifest)
     kept = _read_files(
         spark,
         root,
@@ -2157,9 +1541,10 @@ def tt_delete_where(spark: SparkSession, root: str, predicate: str) -> int:
         spark, kept, root, fs, HPath, partition_cols=pcols
     )
     new_stats = _new_file_stats(spark, root, new_files, manifest, kept)
-    return _publish_cow(
-        spark, fs, HPath, root, head_v, manifest,
-        new_files, touched, new_stats, "delete", _cow_extra(manifest),
+    return tt_log.publish_cow(
+        store, head_v, manifest,
+        new_files, touched, new_stats, "delete", tt_log.cow_extra(manifest),
+        _inline_max(spark),
     )
 
 
@@ -2180,9 +1565,10 @@ def tt_update_where(
     from pyspark.sql import functions as F
 
     root = _named_root(spark, root)
+    store = _store(spark, root)
+    head_v, manifest = tt_log.head(store)
+    files, _stats = tt_log.resolve(store, manifest)
     HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
-    files, _stats = _resolve(spark, fs, HPath, root, manifest)
     full = _read_files(spark, root, manifest)
     for c in set_map:
         if c not in full.columns:
@@ -2199,7 +1585,7 @@ def tt_update_where(
     # partition-column SET works too: values are physical data here, so
     # the rewrite simply re-lays the touched rows under their new
     # partition dirs — no path-only state to migrate
-    pcols = _partition_cols_of(manifest)
+    pcols = tt_log.partition_cols_of(manifest)
     touched_df = _read_files(
         spark,
         root,
@@ -2230,7 +1616,7 @@ def tt_update_where(
     # recompute generated columns over the rewritten rows (Delta does
     # the same): a SET on a source column must move its generated
     # partition value too
-    for g_name, g_expr in _generated_cols_of(manifest).items():
+    for g_name, g_expr in tt_log.generated_cols_of(manifest).items():
         rewritten = rewritten.withColumn(g_name, F.expr(g_expr))
     new_files = _write_data_files(
         spark, rewritten, root, fs, HPath, partition_cols=pcols
@@ -2243,9 +1629,10 @@ def tt_update_where(
         "update",
     )
     new_stats = _new_file_stats(spark, root, new_files, manifest, rewritten)
-    return _publish_cow(
-        spark, fs, HPath, root, head_v, manifest,
-        new_files, touched, new_stats, "update", _cow_extra(manifest),
+    return tt_log.publish_cow(
+        store, head_v, manifest,
+        new_files, touched, new_stats, "update", tt_log.cow_extra(manifest),
+        _inline_max(spark),
     )
 
 
@@ -2268,9 +1655,10 @@ def tt_merge(
     from .merge import _upsert
 
     root = _named_root(spark, root)
+    store = _store(spark, root)
+    head_v, manifest = tt_log.head(store)
+    files, _stats = tt_log.resolve(store, manifest)
     HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
-    files, _stats = _resolve(spark, fs, HPath, root, manifest)
     target = _read_files(spark, root, manifest)
     source = _apply_generated(source, manifest)
     source = source.select(*target.columns)  # align column order
@@ -2289,7 +1677,7 @@ def tt_merge(
         .distinct()
     )
     touched = _touched_relative(spark, root, files, flagged)
-    pcols = _partition_cols_of(manifest)
+    pcols = tt_log.partition_cols_of(manifest)
     base = (
         _read_files(
             spark,
@@ -2316,9 +1704,10 @@ def tt_merge(
     _check_constraints(merged_back, manifest, "merge")
     _check_generated(merged_back, manifest, "merge")
     new_stats = _new_file_stats(spark, root, new_files, manifest, merged)
-    return _publish_cow(
-        spark, fs, HPath, root, head_v, manifest,
-        new_files, touched, new_stats, "merge", _cow_extra(manifest),
+    return tt_log.publish_cow(
+        store, head_v, manifest,
+        new_files, touched, new_stats, "merge", tt_log.cow_extra(manifest),
+        _inline_max(spark),
     )
 
 
@@ -2348,9 +1737,9 @@ def tt_optimize(
     from ..plans.zorder import with_zorder_key
 
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    head_v, manifest = _head(spark, fs, HPath, root)
-    pcols = _partition_cols_of(manifest)
+    store = _store(spark, root)
+    head_v, manifest = tt_log.head(store)
+    pcols = tt_log.partition_cols_of(manifest)
     selected: list[str] | None = None
     if where is not None:
         if not pcols:
@@ -2365,7 +1754,7 @@ def tt_optimize(
                 f"conjunction over partition columns {pcols}, got "
                 f"{where!r}"
             )
-        files, stats = _resolve(spark, fs, HPath, root, manifest)
+        files, stats = tt_log.resolve(store, manifest)
         # a file is selected iff its RECORDED partition value provably
         # satisfies every bound (degenerate [v, v] stats — partition
         # values are always recorded, so no file is ambiguous)
@@ -2426,6 +1815,7 @@ def tt_optimize(
         df = df.repartition(target_files, *[F_col(c) for c in pcols])
     else:
         df = df.coalesce(target_files)
+    HPath, _p, fs = _fs(spark, root)
     new_files = _write_data_files(
         spark, df, root, fs, HPath, partition_cols=pcols
     )
@@ -2435,31 +1825,23 @@ def tt_optimize(
     if selected is not None:
         # partition-scoped: unselected files carry over by reference —
         # an O(delta) commit exactly like DML's copy-on-write
-        return _publish_cow(
-            spark, fs, HPath, root, head_v, manifest,
+        return tt_log.publish_cow(
+            store, head_v, manifest,
             new_files, selected, stats,
-            f"optimize(where={where})", _cow_extra(manifest),
+            f"optimize(where={where})", tt_log.cow_extra(manifest),
+            _inline_max(spark),
         )
     new_manifest = {
-        **_body_full(spark, fs, HPath, root, new_files, stats),
+        **tt_log.body_full(store, new_files, stats, _inline_max(spark)),
         "op": (
             f"optimize(zorder={','.join(zorder_by)})"
             if zorder_by
             else "optimize"
         ),
         "ts": time.time(),
-        **(
-            {"schema": manifest["schema"]}
-            if manifest.get("schema") is not None
-            else {}
-        ),
-        **_carry_constraints(manifest),  # rows identical; carry
-        **_carry_stats_cols(manifest),
-        **_carry_partition(manifest),
-        **_carry_generated(manifest),
-        **_carry_props(manifest),
+        **tt_log.cow_extra(manifest),  # rows identical; carry
     }
-    _publish(spark, fs, HPath, root, head_v + 1, new_manifest)
+    tt_log.publish(store, head_v + 1, new_manifest)
     return head_v + 1
 
 
@@ -2511,22 +1893,17 @@ def tt_clone(
     source's retention isn't under your control."""
     src_root = _named_root(spark, src_root)  # BEFORE the path check:
     # a registered db.table name resolves to its absolute root first
-    if not _is_external(_abs(src_root, "files")):
+    if not tt_log.is_external(tt_log.abs_path(src_root, "files")):
         raise ValueError(
             f"tt_clone: src_root must be an absolute path or URI (or a "
             f"tt_register'd name), got {src_root!r}"
         )
-    HPath, _p, fs = _fs(spark, src_root)
-    versions = _list_versions(fs, HPath, src_root)
-    if not versions:
-        raise AstroSparkError(f"no versioned table at {src_root}")
-    version = versions[-1] if version is None else version
-    if version not in versions:
-        raise AstroSparkError(f"version {version} not found in {src_root}")
-    m = _read_manifest(spark, fs, HPath, src_root, version)
-    files, stats = _resolve(spark, fs, HPath, src_root, m)
-    src_pcols = _partition_cols_of(m)
-    if src_pcols and any(_path_valued(f, src_pcols) for f in files):
+    src = _store(spark, src_root)
+    version = tt_log.pick_version(src, version)
+    m = tt_log.read_manifest(src, version)
+    files, stats = tt_log.resolve(src, m)
+    src_pcols = tt_log.partition_cols_of(m)
+    if src_pcols and any(tt_log.path_valued(f, src_pcols) for f in files):
         raise AstroSparkError(
             "tt_clone: the source version still references ADOPTED Hive "
             "files whose partition values live only in their paths — a "
@@ -2534,30 +1911,19 @@ def tt_clone(
             "resolve against.  OPTIMIZE the source first (rewrites "
             "adopted files into the engine layout), then clone."
         )
-    abs_files = [_abs(src_root, f) for f in files]
-    abs_stats = {_abs(src_root, f): s for f, s in stats.items()}
+    abs_files = [tt_log.abs_path(src_root, f) for f in files]
+    abs_stats = {tt_log.abs_path(src_root, f): s for f, s in stats.items()}
     dst_root = _named_root(spark, dst_root)
-    dHPath, _dp, dfs = _fs(spark, dst_root)
-    if _list_versions(dfs, dHPath, dst_root):
+    dst = _store(spark, dst_root)
+    if tt_log.list_versions(dst):
         raise AstroSparkError(f"versioned table already exists at {dst_root}")
     manifest = {
-        **_body_full(spark, dfs, dHPath, dst_root, abs_files, abs_stats),
+        **tt_log.body_full(dst, abs_files, abs_stats, _inline_max(spark)),
         "op": f"clone({src_root}@v{version})",
         "ts": time.time(),
+        **tt_log.copy_headers(m),
     }
-    if m.get("schema") is not None:
-        manifest["schema"] = m["schema"]
-    if m.get("constraints") is not None:
-        manifest["constraints"] = m["constraints"]
-    if m.get("stats_cols") is not None:
-        manifest["stats_cols"] = m["stats_cols"]
-    if m.get("partition_cols") is not None:
-        manifest["partition_cols"] = m["partition_cols"]
-    if m.get("generated_cols") is not None:
-        manifest["generated_cols"] = m["generated_cols"]
-    if m.get("properties") is not None:
-        manifest["properties"] = m["properties"]
-    _publish(spark, dfs, dHPath, dst_root, 0, manifest)
+    tt_log.publish(dst, 0, manifest)
     return 0
 
 
@@ -2582,8 +1948,8 @@ def tt_changes(
     from pyspark.sql import functions as F
 
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
+    store = _store(spark, root)
+    versions = tt_log.list_versions(store)
     if from_version not in versions:
         raise AstroSparkError(
             f"version {from_version} not found in {root} (vacuumed?)"
@@ -2592,11 +1958,11 @@ def tt_changes(
     if to_version not in versions:
         raise AstroSparkError(f"version {to_version} not found in {root}")
     out = None
-    prev_m = _read_manifest(spark, fs, HPath, root, from_version)
-    prev_files, _ = _resolve(spark, fs, HPath, root, prev_m)
+    prev_m = tt_log.read_manifest(store, from_version)
+    prev_files, _ = tt_log.resolve(store, prev_m)
     for v in [x for x in versions if from_version < x <= to_version]:
-        cur_m = _read_manifest(spark, fs, HPath, root, v)
-        cur_files, _ = _resolve(spark, fs, HPath, root, cur_m)
+        cur_m = tt_log.read_manifest(store, v)
+        cur_files, _ = tt_log.resolve(store, cur_m)
         prev_set, cur_set = set(prev_files), set(cur_files)
         added = [f for f in cur_files if f not in prev_set]
         removed = [f for f in prev_files if f not in cur_set]
@@ -2605,7 +1971,7 @@ def tt_changes(
         # multiset compare is well-typed across schema evolution
         synth = {
             "schema": cur_m.get("schema"),
-            **_carry_partition(cur_m),  # adopted files: path values
+            **tt_log.carry_partition(cur_m),  # adopted files: path values
         }
         added_df = (
             _read_files(spark, root, {"files": added, **synth})
@@ -2664,12 +2030,11 @@ def tt_changes_drain(
     passing a table whose v0 matters through fn yourself, or start the
     feed after tt_create).  Returns the versions consumed."""
     root = _named_root(spark, root)
-    HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
+    versions = _versions(spark, root)
     if not versions:
         raise AstroSparkError(f"no versioned table at {root}")
     head = versions[-1]
-    sp = HPath(state_path)
+    sp = spark._jvm.org.apache.hadoop.fs.Path(state_path)
     state_fs = sp.getFileSystem(spark._jsc.hadoopConfiguration())
     last = versions[0]
     if state_fs.exists(sp):
@@ -2708,14 +2073,15 @@ def tt_vacuum(
     if keep_last < 1:
         raise ValueError("tt_vacuum: keep_last must be >= 1")
     root = _named_root(spark, root)
+    store = _store(spark, root)
     HPath, _p, fs = _fs(spark, root)
-    versions = _list_versions(fs, HPath, root)
+    versions = tt_log.list_versions(store)
     keep, drop = versions[-keep_last:], versions[:-keep_last]
     live: set[str] = set()
     live_refs: set[str] = set()
     for v in keep:
-        m = _read_manifest(spark, fs, HPath, root, v)
-        fl, _st = _resolve(spark, fs, HPath, root, m)
+        m = tt_log.read_manifest(store, v)
+        fl, _st = tt_log.resolve(store, m)
         live |= set(fl)
         if "base" in m:
             live_refs.add(m["base"])
@@ -2727,24 +2093,20 @@ def tt_vacuum(
     # 10⁵-file reclaim into minutes for no reason
     import os as _os
 
-    local = "://" not in root or root.startswith("file:")
+    local = tt_log.local_path(root)
 
     def _lpath(f: str) -> str:
-        ab = f"{root}/{f}"
-        if ab.startswith("file:"):
-            ab = ab[5:].lstrip("/")
-            ab = ab if ab.startswith("/") else "/" + ab
-        return ab
+        return f"{local}/{f}"
 
     for v in drop:
-        m = _read_manifest(spark, fs, HPath, root, v)
-        fl, _st = _resolve(spark, fs, HPath, root, m)
+        m = tt_log.read_manifest(store, v)
+        fl, _st = tt_log.resolve(store, m)
         for f in fl:
-            if _is_external(f):
+            if tt_log.is_external(f):
                 continue  # shallow-clone ref: the SOURCE table owns it
             if f in live or f in reclaimed:  # shared across versions
                 continue
-            if local:
+            if local is not None:
                 if not _os.path.exists(_lpath(f)):
                     continue
                 if not dry_run:
@@ -2762,7 +2124,7 @@ def tt_vacuum(
         if "base" in m and m["base"] not in live_refs:
             dead_refs.add(m["base"])
         if not dry_run:
-            fs.delete(HPath(f"{root}/{_LOG}/{_manifest_name(v)}"), False)
+            fs.delete(HPath(f"{root}/{tt_log.manifest_ref(v)}"), False)
     if dry_run:
         return deleted  # nothing touched: no manifest drops, no sweeps
     # checkpoints referenced only by vacuumed manifests are log garbage
@@ -2771,7 +2133,7 @@ def tt_vacuum(
             fs.delete(HPath(f"{root}/{ref}"), False)
     # ORPHANED checkpoints: a commit retry that lost its optimistic-
     # concurrency race (or an abandoned tail compaction) writes a
-    # _log/ckpt-*.parquet that no manifest ever references — on
+    # checkpoint that no manifest ever references — on
     # contended tables those full-snapshot files leak indefinitely.
     # After this vacuum only `keep` manifests survive, so any ckpt not
     # in their base refs is dead.  A brief grace window protects a
@@ -2790,20 +2152,20 @@ def tt_vacuum(
     # an in-flight commit's checkpoint look old enough to delete.
     # Fall back to the JVM clock only if the FS won't stamp the probe.
     try:
-        probe = HPath(f"{root}/{_LOG}/.clock-probe-{uuid.uuid4().hex}")
+        probe = HPath(f"{root}/{tt_log.LOG}/.clock-probe-{uuid.uuid4().hex}")
         stream = fs.create(probe, True)
         stream.close()
         now_ms = fs.getFileStatus(probe).getModificationTime()
         fs.delete(probe, False)
     except Exception:  # pragma: no cover - read-only or exotic FS
         now_ms = spark._jvm.java.lang.System.currentTimeMillis()
-    log = HPath(f"{root}/{_LOG}")
+    log = HPath(f"{root}/{tt_log.LOG}")
     if fs.exists(log):
         for st in fs.listStatus(log):
             name = st.getPath().getName()
-            if not (name.startswith("ckpt-") and name.endswith(".parquet")):
+            if not tt_log.is_checkpoint(name):
                 continue
-            ref = f"{_LOG}/{name}"
+            ref = f"{tt_log.LOG}/{name}"
             if ref in live_refs:
                 continue
             if now_ms - st.getModificationTime() < grace_s * 1000.0:

@@ -123,13 +123,16 @@ def _infer_csv_schema_capped(
     spark: SparkSession, path: str, opts: dict, sample_rows: int
 ):
     """Infer a CSV schema from the first ``sample_rows`` rows of the FIRST
-    matching file only.
+    matching file that holds a data row.
 
     Reference parity: LOAD_TABLE_AUTODETECT_ROWS_COUNT = 1000 rows of the
     first file (``databases/base.py:283-319``, first-file-only comment at
     438-441).  Scale win: Spark's stock ``inferSchema`` runs a SECOND full
     pass over the input; sampling the head keeps inference O(sample) for
-    a 100 TB CSV load.
+    a 100 TB CSV load.  A header-only file (what Spark writes for an
+    empty split) would type every column STRING, so such files are
+    skipped; the check reads a file's first lines driver-side, so the
+    usual case still costs one sampling job.
     """
     from ..operators.files import get_file_list
 
@@ -138,7 +141,11 @@ def _infer_csv_schema_capped(
         for f in get_file_list(spark, path)
         if not os.path.basename(f).startswith(("_", "."))
     ]
-    first = files[0] if files else path
+    header = str(opts.get("header", "false")).lower() == "true"
+    first = next(
+        (f for f in files if _has_data_row(spark, f, header)),
+        files[0] if files else path,
+    )
     head = spark.read.text(first).limit(sample_rows + 1)  # +1 header line
     return (
         spark.read.options(**opts)
@@ -146,6 +153,46 @@ def _infer_csv_schema_capped(
         .csv(head.rdd.map(lambda r: r.value))
         .schema
     )
+
+
+def _has_data_row(spark: SparkSession, path: str, header: bool) -> bool:
+    """True when the CSV at ``path`` has a non-blank line after its
+    header (any non-blank line without one).  Reads the first lines
+    through the Hadoop filesystem (decompressing by extension) — no
+    Spark job.  Unreadable input and a long run of blank lines count as
+    data, so the caller's sampling decides as it always did."""
+    from py4j.protocol import Py4JError
+
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    try:
+        p = jvm.org.apache.hadoop.fs.Path(path)
+        stream = p.getFileSystem(conf).open(p)
+    except Py4JError:
+        return True
+    try:
+        codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+            conf
+        ).getCodec(p)
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        reader = jvm.java.io.BufferedReader(
+            jvm.java.io.InputStreamReader(stream, "UTF-8")
+        )
+        skip = 1 if header else 0
+        for _ in range(64):
+            line = reader.readLine()
+            if line is None:
+                return False
+            if skip:
+                skip -= 1
+            elif line.strip():
+                return True
+        return True
+    except Py4JError:
+        return True
+    finally:
+        stream.close()
 
 
 def _maybe_flatten(df: DataFrame, file: File) -> DataFrame:

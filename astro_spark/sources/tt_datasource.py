@@ -37,12 +37,17 @@ engine-internal work prefer ``tt_read``/``tt_changes_drain``; this
 source exists so everything else on a cluster can read the format.
 Filesystem access is ``pyarrow.fs.FileSystem.from_uri`` (local paths
 always; object stores wherever pyarrow's bundled filesystems reach).
+
+The log format, version pick, file pruning and commit protocol are
+``sources/tt_log.py``'s — the same code ``operators/timetravel.py``
+runs — so this module holds only the Spark data source plumbing: Arrow
+decode, the stream offsets, and the pyarrow checks that let a commit
+skip the JVM.
 """
 
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -56,148 +61,19 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-_LOG = "_log"
-_PAD = 8
-
-
-def _abs_entry(path: str, rel: str) -> str:
-    """Shallow-clone manifest entries are absolute paths/URIs into the
-    source table's root; everything else is root-relative."""
-    return rel if (rel.startswith("/") or "://" in rel) else f"{path}/{rel}"
-
-
-def _fs_of(root: str):
-    from pyarrow import fs as pafs
-
-    if "://" in root:
-        f, path = pafs.FileSystem.from_uri(root)
-        return f, path
-    return pafs.LocalFileSystem(), os.path.abspath(root)
-
-
-def _list_versions(root: str) -> list[int]:
-    from pyarrow import fs as pafs
-
-    f, path = _fs_of(root)
-    sel = pafs.FileSelector(f"{path}/{_LOG}", allow_not_found=True)
-    out = []
-    for info in f.get_file_info(sel):
-        name = info.base_name
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                out.append(int(name[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _read_manifest(root: str, version: int) -> dict:
-    f, path = _fs_of(root)
-    with f.open_input_stream(
-        f"{path}/{_LOG}/v{version:0{_PAD}d}.json"
-    ) as stream:
-        return json.loads(stream.read().decode("utf-8"))
-
-
-def _resolve_files(root: str, manifest: dict) -> list[str]:
-    """Complete file list — inline form verbatim, checkpoint form =
-    parquet base snapshot minus remove plus add (mirrors
-    ``timetravel._resolve`` without a SparkSession)."""
-    return _resolve_files_stats(root, manifest)[0]
-
-
-def _resolve_files_stats(
-    root: str, manifest: dict
-) -> tuple[list[str], dict]:
-    """(complete file list, per-file stats) resolved pyarrow-side."""
-    if "base" not in manifest:
-        return (
-            manifest.get("files") or [],
-            manifest.get("stats") or {},
-        )
-    import pyarrow.parquet as pq
-
-    f, path = _fs_of(root)
-    with f.open_input_file(f"{path}/{manifest['base']}") as fh:
-        t = pq.read_table(fh)
-    files = t.column("file").to_pylist()
-    raw = t.column("stats").to_pylist()
-    stats = {x: json.loads(s) for x, s in zip(files, raw) if s is not None}
-    rm = set(manifest.get("remove") or [])
-    if rm:
-        files = [x for x in files if x not in rm]
-        stats = {x: s for x, s in stats.items() if x not in rm}
-    files = files + (manifest.get("add") or [])
-    stats.update(manifest.get("add_stats") or {})
-    return files, stats
-
-
-def _parse_temporal_ds(v):
-    """datetime for a canonical date/timestamp string, else None —
-    mirrors ``timetravel._parse_temporal`` without a SparkSession."""
-    from datetime import datetime
-
-    if not isinstance(v, str):
-        return None
-    try:
-        return datetime.fromisoformat(v)
-    except ValueError:
-        return None
-
-
-def _skip_provable_ds(rng, lo, hi) -> bool:
-    """``timetravel._skip_provable``'s exact logic: temporal string
-    bounds compare in time space, cross-type proves nothing."""
-    r0, r1 = rng[0], rng[1]
-    t0, t1 = _parse_temporal_ds(r0), _parse_temporal_ds(r1)
-    if t0 is not None and t1 is not None:
-        # offset-aware vs naive datetimes (e.g. a pre-fix manifest
-        # serialized '+00:00' bounds) raise TypeError on <: proves
-        # nothing — keep the file (sound)
-        try:
-            if hi is not None:
-                th = _parse_temporal_ds(hi)
-                if th is not None and t0 > th:
-                    return True
-            if lo is not None:
-                tl = _parse_temporal_ds(lo)
-                if tl is not None and t1 < tl:
-                    return True
-        except TypeError:
-            return False
-        return False
-    try:
-        if hi is not None and r0 > hi:
-            return True
-        if lo is not None and r1 < lo:
-            return True
-    except TypeError:
-        return False
-    return False
+from . import tt_log
 
 
 def _pick_version(root: str, options: dict) -> int:
-    versions = _list_versions(root)
-    if not versions:
-        raise ValueError(f"no versioned table at {root}")
     v = options.get("versionasof")
     ts = options.get("timestampasof")
     if v is not None and ts is not None:
         raise ValueError("pass at most one of versionAsOf / timestampAsOf")
-    if v is not None:
-        v = int(v)
-        if v not in versions:
-            raise ValueError(f"version {v} not found in {root}")
-        return v
-    if ts is not None:
-        ts = float(ts)
-        eligible = [
-            x for x in versions if _read_manifest(root, x)["ts"] <= ts
-        ]
-        if not eligible:
-            raise ValueError(f"no version at or before ts={ts} in {root}")
-        return eligible[-1]
-    return versions[-1]
+    return tt_log.pick_version(
+        tt_log.ArrowStore(root),
+        int(v) if v is not None else None,
+        float(ts) if ts is not None else None,
+    )
 
 
 def _spark_schema(manifest: dict) -> StructType:
@@ -220,43 +96,12 @@ class _FilePartition(InputPartition):
     part_json: str = ""
 
 
-def _partition_path_values(rel: str, partition_cols: list[str]) -> dict:
-    """{col: typed value} parsed from ``key=value`` path segments —
-    mirrors ``timetravel._partition_values`` without a SparkSession.
-    Only ADOPTED files need this (engine layout uses ``__p_`` segments
-    AND keeps the column in the data)."""
-    from urllib.parse import unquote
-
-    pset = set(partition_cols)
-    out: dict = {}
-    for seg in rel.split("/")[:-1]:
-        k, sep, v = seg.partition("=")
-        if not sep:
-            continue
-        if k.startswith("__p_"):
-            k = k[len("__p_"):]
-        if k not in pset:
-            continue
-        v = unquote(v)
-        if v == "__HIVE_DEFAULT_PARTITION__":
-            out[k] = None
-            continue
-        try:
-            out[k] = int(v)
-        except ValueError:
-            try:
-                out[k] = float(v)
-            except ValueError:
-                out[k] = v
-    return out
-
-
 def _part_json_for(rel: str, partition_cols: list[str]) -> str:
     """Serialized path values for a manifest entry, or '' when the
     file carries its partition columns physically."""
-    if not partition_cols or rel.startswith("files/"):
+    if not tt_log.path_valued(rel, partition_cols):
         return ""
-    vals = _partition_path_values(rel, partition_cols)
+    vals = tt_log.partition_values(rel, partition_cols)
     return json.dumps(vals) if vals else ""
 
 
@@ -277,7 +122,7 @@ def _arrow_batches(
 
     part_vals = json.loads(part_json) if part_json else {}
     want = to_arrow_schema(schema)
-    f, path = _fs_of(abs_path)
+    f, path = tt_log.arrow_fs(abs_path)
     with f.open_input_file(path) as fh:
         table = pq.read_table(fh)
     cols = []
@@ -346,28 +191,15 @@ class _TTBatchReader(DataSourceReader):
             yield flt  # Spark always re-applies — pruning is partial
 
     def partitions(self):
-        manifest = _read_manifest(self._root, self._version)
-        files, stats = _resolve_files_stats(self._root, manifest)
+        store = tt_log.ArrowStore(self._root)
+        manifest = tt_log.read_manifest(store, self._version)
+        files, stats = tt_log.resolve(store, manifest)
         if self._bounds:
-
-            def _keep(rel: str) -> bool:
-                st = stats.get(rel)
-                if st is None:
-                    return True  # absence is never evidence
-                for col, (lo, hi) in self._bounds.items():
-                    rng = st.get(col)
-                    if rng is None or rng[0] is None or rng[1] is None:
-                        continue
-                    if _skip_provable_ds(rng, lo, hi):
-                        return False
-                return True
-
-            files = [rel for rel in files if _keep(rel)]
-        _f, path = _fs_of(self._root)
-        pcols = list(manifest.get("partition_cols") or [])
+            files = tt_log.prune(files, stats, self._bounds)
+        pcols = tt_log.partition_cols_of(manifest)
         return [
             _FilePartition(
-                _abs_entry(path, rel),
+                tt_log.abs_path(self._root, rel),
                 self._version,
                 _part_json_for(rel, pcols),
             )
@@ -391,6 +223,7 @@ class _TTStreamReader(DataSourceStreamReader):
 
     def __init__(self, root: str, schema: StructType, options: dict):
         self._root = root
+        self._store = tt_log.ArrowStore(root)
         self._schema = schema
         self._ignore_changes = (
             str(options.get("ignorechanges", "false")).lower() == "true"
@@ -412,7 +245,7 @@ class _TTStreamReader(DataSourceStreamReader):
             # the timestamp-string form Delta's option takes
             # ('2026-08-16 00:00:00' — session-local, like the RESTORE
             # route).
-            versions = _list_versions(root)
+            versions = tt_log.list_versions(self._store)
             if not versions:
                 raise ValueError(f"no versioned table at {root}")
             try:
@@ -422,7 +255,9 @@ class _TTStreamReader(DataSourceStreamReader):
 
                 ts = datetime.fromisoformat(str(start_ts)).timestamp()
             later = [
-                v for v in versions if _read_manifest(root, v)["ts"] >= ts
+                v
+                for v in versions
+                if tt_log.read_manifest(self._store, v)["ts"] >= ts
             ]
             if later and later[0] - 1 >= 0 and (later[0] - 1) not in versions:
                 # the version preceding the first qualifying commit was
@@ -434,7 +269,7 @@ class _TTStreamReader(DataSourceStreamReader):
             else:
                 self._start = (later[0] - 1) if later else versions[-1]
         elif start is None:
-            versions = _list_versions(root)
+            versions = tt_log.list_versions(self._store)
             if not versions:
                 raise ValueError(f"no versioned table at {root}")
             # Delta's default: start from the current snapshot — only
@@ -450,16 +285,15 @@ class _TTStreamReader(DataSourceStreamReader):
         return {"version": self._start}
 
     def latestOffset(self) -> dict:
-        versions = _list_versions(self._root)
+        versions = tt_log.list_versions(self._store)
         return {"version": versions[-1] if versions else self._start}
 
     def partitions(self, start: dict, end: dict):
         lo, hi = int(start["version"]), int(end["version"])
         if hi <= lo:
             return [_FilePartition("")]
-        _f, path = _fs_of(self._root)
         out: list[_FilePartition] = []
-        all_versions = _list_versions(self._root)
+        all_versions = tt_log.list_versions(self._store)
         # seed the prev file set AT the start offset (one manifest read),
         # then walk only (lo, hi] — a micro-batch costs O(batch versions)
         # manifest reads, not O(table lifetime)
@@ -481,17 +315,17 @@ class _TTStreamReader(DataSourceStreamReader):
             )
         prev: set[str] | None = (
             set(
-                _resolve_files(
-                    self._root, _read_manifest(self._root, base[-1])
-                )
+                tt_log.resolve(
+                    self._store, tt_log.read_manifest(self._store, base[-1])
+                )[0]
             )
             if base
             else None
         )
         for v in [v for v in all_versions if lo < v <= hi]:
-            manifest = _read_manifest(self._root, v)
-            files = _resolve_files(self._root, manifest)
-            pcols = list(manifest.get("partition_cols") or [])
+            manifest = tt_log.read_manifest(self._store, v)
+            files, _stats = tt_log.resolve(self._store, manifest)
+            pcols = tt_log.partition_cols_of(manifest)
             fset = set(files)
             added = [f for f in files if prev is None or f not in prev]
             removed = prev is not None and not prev <= fset
@@ -518,7 +352,9 @@ class _TTStreamReader(DataSourceStreamReader):
                 )
             out.extend(
                 _FilePartition(
-                    _abs_entry(path, rel), v, _part_json_for(rel, pcols)
+                    tt_log.abs_path(self._root, rel),
+                    v,
+                    _part_json_for(rel, pcols),
                 )
                 for rel in added
             )
@@ -551,86 +387,18 @@ class _TTWriteMessage(WriterCommitMessage):
 # there boots an ENTIRE fresh local JVM (~7-9 s per stream start,
 # measured) just to publish one manifest.  The rest of this data source
 # is already Spark-free (pyarrow manifests + Arrow decode), so the
-# commit gets the same treatment: validate + build + atomically publish
-# the manifest with pyarrow/os only, mirroring
-# ``timetravel.tt_commit_files`` field-for-field.  Conditions the
-# Arrow path can't honor (non-local root — no O_EXCL put-if-absent;
-# CHECK constraints — Spark SQL expressions; exotic stats types) raise
+# commit gets the same treatment: ``tt_log.commit`` — the very commit
+# core ``timetravel.tt_commit_files`` runs — with a pyarrow ``prepare``
+# that validates the files and computes their stats.  Conditions the
+# pyarrow checks can't honor (non-local root — no os.link
+# put-if-absent; CHECK constraints and generated columns — Spark SQL
+# expressions; schema drift; exotic stats types) raise
 # ``_ArrowCommitUnsupported`` BEFORE anything publishes and fall back
 # to the session path, so semantics never fork.
-
-_INLINE_MAX_DEFAULT = 1000  # timetravel's spark.astro.tt.inlineFilesMax
 
 
 class _ArrowCommitUnsupported(Exception):
     """The Spark-free commit can't honor this table/root — fall back."""
-
-
-class _ArrowCommitRace(Exception):
-    """Another writer published the raced version (retry the head)."""
-
-
-def _local_root(root: str) -> str:
-    """Absolute local path of ``root``, or raise (the Arrow commit's
-    isolation story is os.O_EXCL put-if-absent — local/NFS only; other
-    filesystems take the session path)."""
-    if root.startswith("file://"):
-        root = root[len("file://"):]
-    if "://" in root:
-        raise _ArrowCommitUnsupported(f"non-local root {root!r}")
-    return os.path.abspath(root)
-
-
-def _atomic_publish_arrow(path: str, version: int, manifest: dict) -> None:
-    """Put-if-absent of the manifest WITH its content (r14): the former
-    O_CREAT|O_EXCL-then-write claimed the slot atomically but exposed a
-    zero-length file to concurrent readers until the write landed (a
-    reader racing the commit got JSONDecodeError — caught by the
-    linearizability property test), and a writer crash in the window
-    would wedge the version slot.  Write the full JSON to a hidden temp
-    name first, then ``os.link`` it into place: link(2) fails EEXIST
-    atomically and the manifest carries complete content from its first
-    visible instant (works on local and NFS, the same scope as the old
-    O_EXCL story)."""
-    import uuid as _uuid
-
-    log_dir = f"{path}/{_LOG}"
-    os.makedirs(log_dir, exist_ok=True)
-    name = f"v{version:0{_PAD}d}.json"
-    tmp = f"{log_dir}/.{name}.tmp-{_uuid.uuid4().hex}"
-    payload = json.dumps(manifest).encode("utf-8")
-    with open(tmp, "wb") as fh:
-        fh.write(payload)
-    try:
-        os.link(tmp, f"{log_dir}/{name}")
-    except FileExistsError as exc:
-        raise _ArrowCommitRace(
-            f"version {version} was committed by another writer"
-        ) from exc
-    except OSError:
-        # Mounts without hard-link support (SMB/FAT/some FUSE) raise
-        # EPERM/ENOTSUP from link(2) (ADVICE r14): fall back to the old
-        # O_CREAT|O_EXCL open — the empty-file exposure window is the
-        # prior status quo on exactly those filesystems.
-        _excl_publish(f"{log_dir}/{name}", payload, version)
-    finally:
-        try:
-            os.remove(tmp)
-        except OSError:
-            pass
-
-
-def _excl_publish(target: str, payload: bytes, version: int) -> None:
-    try:
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise _ArrowCommitRace(
-            f"version {version} was committed by another writer"
-        ) from exc
-    try:
-        os.write(fd, payload)
-    finally:
-        os.close(fd)
 
 
 def _files_schema_arrow(path: str, files: list[str]):
@@ -651,26 +419,6 @@ def _files_schema_arrow(path: str, files: list[str]):
         return from_arrow_schema(merged)
     except (pa.ArrowInvalid, OSError) as exc:
         raise _ArrowCommitUnsupported(f"footer schema: {exc}") from exc
-
-
-def _evolved_schema_arrow(prev_json: str | None, file_schema) -> str:
-    """``timetravel._evolved_schema`` with merge_schema=False, on a
-    footer-derived schema.  Any conflict defers to the session path —
-    the JVM raises the authoritative error (a footer round-trip can
-    disagree on e.g. timestamp NTZ-ness where the plan schema
-    wouldn't), and the error path may be slow."""
-    from pyspark.sql.types import StructType
-
-    if prev_json is None:
-        return json.dumps(file_schema.jsonValue())
-    prev = StructType.fromJson(json.loads(prev_json))
-    by_name = {f.name: f for f in prev.fields}
-    for f in file_schema.fields:
-        if f.name not in by_name:
-            raise _ArrowCommitUnsupported(f"write adds column {f.name!r}")
-        if by_name[f.name].dataType != f.dataType:
-            raise _ArrowCommitUnsupported(f"type conflict on {f.name!r}")
-    return prev_json  # no evolution possible with merge_schema=False
 
 
 def _file_stats_arrow(
@@ -740,189 +488,61 @@ def _file_stats_arrow(
         raise _ArrowCommitUnsupported(f"stats scan: {exc}") from exc
 
 
-def _write_checkpoint_arrow(path: str, files: list[str], stats: dict) -> str:
-    """``timetravel._write_checkpoint``'s exact layout, local-fs."""
-    import uuid as _uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rel = f"{_LOG}/ckpt-{_uuid.uuid4().hex}.parquet"
-    table = pa.table(
-        {
-            "file": pa.array(files, type=pa.string()),
-            "stats": pa.array(
-                [json.dumps(stats[f]) if f in stats else None for f in files],
-                type=pa.string(),
-            ),
-        }
-    )
-    os.makedirs(f"{path}/{_LOG}", exist_ok=True)
-    pq.write_table(table, f"{path}/{rel}")
-    return rel
-
-
-def _body_full_arrow(
-    path: str, files: list[str], stats: dict, inline_max: int
-) -> dict:
-    if len(files) <= inline_max:
-        body: dict = {"files": files, "n_files": len(files)}
-        if stats:
-            body["stats"] = stats
-        return body
-    ref = _write_checkpoint_arrow(path, files, stats)
-    return {"base": ref, "add": [], "remove": [], "n_files": len(files)}
-
-
-def _body_delta_arrow(
-    path: str,
-    root: str,
-    prev: dict,
-    added: list[str],
-    added_stats: dict,
-    inline_max: int,
-) -> dict:
-    """``timetravel._body_delta`` for the append-only (removed=[]) case."""
-    if "base" in prev:
-        add = (prev.get("add") or []) + added
-        remove = prev.get("remove") or []
-        n_files = int(prev["n_files"]) + len(added)
-        if len(add) + len(remove) <= inline_max:
-            add_stats = {**(prev.get("add_stats") or {}), **added_stats}
-            body: dict = {
-                "base": prev["base"],
-                "add": add,
-                "remove": remove,
-                "n_files": n_files,
-            }
-            if add_stats:
-                body["add_stats"] = add_stats
-            return body
-        files, stats = _resolve_files_stats(root, prev)
-        files = files + added
-        stats = dict(stats)
-        stats.update(added_stats)
-        return _body_full_arrow(path, files, stats, inline_max)
-    kept = prev.get("files") or []
-    files = kept + added
-    old = prev.get("stats") or {}
-    stats = {f: old[f] for f in kept if f in old}
-    stats.update(added_stats)
-    return _body_full_arrow(path, files, stats, inline_max)
-
-
-def _commit_files_arrow(
+def _commit_arrow(
     root: str,
     new_files: list[str],
     mode: str,
-    inline_max: int = _INLINE_MAX_DEFAULT,
+    inline_max: int = tt_log.INLINE_MAX,
     max_retries: int = 10,
 ) -> int:
-    """Spark-free twin of ``timetravel.tt_commit_files``: same manifest
-    fields, same append-race retry, same log layout — raises
+    """``tt_log.commit`` without a SparkSession — the same manifest
+    ``timetravel.tt_commit_files`` publishes.  Raises
     ``_ArrowCommitUnsupported`` (caller falls back to the session path)
     for non-local roots, constrained tables, schema drift, or exotic
     stats types.  Nothing publishes before every check passes."""
-    import time as _time
+    path = tt_log.local_path(root)
+    if path is None:
+        raise _ArrowCommitUnsupported(f"non-local root {root!r}")
+    files = sorted(new_files)
+    file_schema = _files_schema_arrow(path, files)
+    schema_json = json.dumps(file_schema.jsonValue())
 
-    path = _local_root(root)
-    file_schema = _files_schema_arrow(path, sorted(new_files))
-    versions = _list_versions(root)
-    if not versions:
-        body = _body_full_arrow(path, sorted(new_files), {}, inline_max)
-        manifest = {
-            **body,
-            "op": "create",
-            "ts": _time.time(),
-            "schema": json.dumps(file_schema.jsonValue()),
-        }
-        try:
-            _atomic_publish_arrow(path, 0, manifest)
-            return 0
-        except _ArrowCommitRace:
-            versions = _list_versions(root)  # lost create: append below
-    def _scan_cols(prev: dict) -> tuple[list[str], list[str], list[str]]:
-        """(stats_cols header, partition_cols header, columns to scan):
-        partition columns join the stats scan — stream-written files
-        carry them physically, and their bounds drive partition
-        pruning exactly like the session path's ``_new_file_stats``."""
-        carry = _manifest_stats_cols(prev)
-        pcarry = list(prev.get("partition_cols") or [])
-        present = {f.name for f in file_schema.fields}
-        cols = [c for c in carry if c in present]
-        cols += [c for c in pcarry if c in present and c not in cols]
-        return carry, pcarry, cols
-
-    if mode == "overwrite":
-        prev = _read_manifest(root, versions[-1])
+    def prepare(prev: dict | None) -> tuple[str, dict]:
+        if prev is None:
+            return schema_json, {}
         if prev.get("constraints"):
             raise _ArrowCommitUnsupported("table has CHECK constraints")
         if prev.get("generated_cols"):
             # GENERATED ALWAYS AS expressions are Spark SQL — the
             # session path derives/validates them
             raise _ArrowCommitUnsupported("table has GENERATED columns")
-        carry, pcarry, cols = _scan_cols(prev)
-        stats = _file_stats_arrow(path, sorted(new_files), cols) if cols else {}
-        manifest = {
-            **_body_full_arrow(path, sorted(new_files), stats, inline_max),
-            "op": "overwrite",
-            "ts": _time.time(),
-            "schema": json.dumps(file_schema.jsonValue()),
-            **({"stats_cols": carry} if carry else {}),
-            **({"partition_cols": pcarry} if pcarry else {}),
-            **(
-                {"properties": prev["properties"]}
-                if prev.get("properties")
-                else {}
-            ),
-        }
-        _atomic_publish_arrow(path, versions[-1] + 1, manifest)
-        return versions[-1] + 1
-    for _ in range(max_retries):
-        versions = _list_versions(root)
-        head = versions[-1]
-        prev = _read_manifest(root, head)
-        if prev.get("constraints"):
-            raise _ArrowCommitUnsupported("table has CHECK constraints")
-        if prev.get("generated_cols"):
-            raise _ArrowCommitUnsupported("table has GENERATED columns")
-        evolved = _evolved_schema_arrow(prev.get("schema"), file_schema)
-        carry, pcarry, cols = _scan_cols(prev)
-        new_stats = (
-            _file_stats_arrow(path, sorted(new_files), cols) if cols else {}
-        )
-        manifest = {
-            **_body_delta_arrow(
-                path, root, prev, sorted(new_files), new_stats, inline_max
-            ),
-            "op": "append",
-            "ts": _time.time(),
-            "schema": evolved,
-            **({"stats_cols": carry} if carry else {}),
-            **({"partition_cols": pcarry} if pcarry else {}),
-            **(
-                {"properties": prev["properties"]}
-                if prev.get("properties")
-                else {}
-            ),
-        }
-        try:
-            _atomic_publish_arrow(path, head + 1, manifest)
-            return head + 1
-        except _ArrowCommitRace:
-            continue
-    raise RuntimeError(
-        f"lost the append race {max_retries} times at {root}"
+        schema = schema_json
+        if mode == "append" and prev.get("schema") is not None:
+            # no evolution without merge_schema: any drift defers to the
+            # session path — the JVM raises the authoritative error (a
+            # footer round-trip can disagree on e.g. timestamp NTZ-ness
+            # where the plan schema wouldn't)
+            added, conflicts = tt_log.schema_drift(prev["schema"], schema_json)
+            if added or conflicts:
+                raise _ArrowCommitUnsupported(
+                    f"schema drift: adds {added}, conflicts {conflicts}"
+                )
+            schema = prev["schema"]
+        # partition columns join the stats scan — stream-written files
+        # carry them physically, and their bounds drive partition
+        # pruning exactly like the session path's ``_new_file_stats``
+        present = set(file_schema.fieldNames())
+        cols = [c for c in tt_log.stats_cols_of(prev) if c in present]
+        cols += [
+            c
+            for c in tt_log.partition_cols_of(prev)
+            if c in present and c not in cols
+        ]
+        return schema, (_file_stats_arrow(path, files, cols) if cols else {})
+
+    return tt_log.commit(
+        tt_log.ArrowStore(root), files, mode, prepare, inline_max, max_retries
     )
-
-
-def _manifest_stats_cols(manifest: dict) -> list[str]:
-    """``timetravel._stats_cols_of`` without a SparkSession."""
-    cols = manifest.get("stats_cols")
-    if cols:
-        return list(cols)
-    old = manifest.get("stats") or {}
-    return sorted({c for st in old.values() for c in st})
 
 
 class _TTArrowWriter(DataSourceArrowWriter):
@@ -942,22 +562,20 @@ class _TTArrowWriter(DataSourceArrowWriter):
     _MAX_PARTITION_SPLITS = 32
 
     def __init__(self, root: str, overwrite: bool):
-        import uuid as _uuid
-
         self._root = root
         self._overwrite = overwrite
-        self._commit_dir = f"files/{_uuid.uuid4().hex}"
+        self._commit_dir = tt_log.new_commit_dir()
         # partitioned table? split each task's output one-file-per-
         # partition-value so the commit's scanned stats are exact
         # degenerate bounds — streaming ingest into a date-partitioned
         # table stays manifest-prunable.  Driver-side lookup; absent
         # table (create) or unpartitioned → no splitting.
         try:
-            versions = _list_versions(root)
+            store = tt_log.ArrowStore(root)
+            versions = tt_log.list_versions(store)
             self._pcols = (
-                list(
-                    _read_manifest(root, versions[-1]).get("partition_cols")
-                    or []
+                tt_log.partition_cols_of(
+                    tt_log.read_manifest(store, versions[-1])
                 )
                 if versions
                 else []
@@ -1001,7 +619,7 @@ class _TTArrowWriter(DataSourceArrowWriter):
         if not batches:
             return _TTWriteMessage([])
         table = pa.Table.from_batches(batches)
-        f, path = _fs_of(self._root)
+        f, path = tt_log.arrow_fs(self._root)
         f.create_dir(f"{path}/{self._commit_dir}", recursive=True)
         rels = []
         for part in self._split_tables(table):
@@ -1030,7 +648,7 @@ class _TTArrowWriter(DataSourceArrowWriter):
         # it can't honor (non-local root, CHECK constraints, generated
         # columns, schema drift, exotic stats) falls back to a session.
         try:
-            _commit_files_arrow(
+            _commit_arrow(
                 self._root,
                 files,
                 mode="overwrite" if self._overwrite else "append",
@@ -1054,7 +672,7 @@ class _TTArrowWriter(DataSourceArrowWriter):
         )
 
     def abort(self, messages):
-        f, path = _fs_of(self._root)
+        f, path = tt_log.arrow_fs(self._root)
         try:  # best-effort: unpublished files are invisible anyway
             f.delete_dir(f"{path}/{self._commit_dir}")
         except Exception:
@@ -1070,43 +688,20 @@ class _TTStreamWriter(DataSourceStreamWriter, _TTArrowWriter):
     Spark runs a Python streaming sink's ``commit`` in a detached
     runner process (no JVM gateway), where ``getOrCreate`` would boot a
     whole fresh local JVM per stream (~7-9 s measured).  The commit is
-    therefore Arrow-first (``_commit_files_arrow`` — identical manifest
-    semantics, pure pyarrow/os), falling back to the session path only
-    for what the Spark-free twin can't honor: non-local roots, tables
-    with CHECK constraints (Spark SQL expressions), schema drift, or
-    decimal stats."""
-
-    def __init__(self, root: str, overwrite: bool, options: dict | None = None):
-        _TTArrowWriter.__init__(self, root, overwrite)
-        opts = options or {}
-        try:
-            self._inline_max = int(
-                opts.get("inlinefilesmax", _INLINE_MAX_DEFAULT)
-            )
-        except (TypeError, ValueError):
-            self._inline_max = _INLINE_MAX_DEFAULT
+    therefore Arrow-first (``_commit_arrow`` — the shared
+    ``tt_log.commit`` core, pure pyarrow/os), falling back to the
+    session path only for what the pyarrow checks can't honor:
+    non-local roots, tables with CHECK constraints (Spark SQL
+    expressions), schema drift, or decimal stats."""
 
     def write(self, iterator):
-        import uuid as _uuid
-
         # a fresh dir per task invocation: micro-batches must not share
         # commit dirs across retries
-        self._commit_dir = f"files/{_uuid.uuid4().hex}"
+        self._commit_dir = tt_log.new_commit_dir()
         return _TTArrowWriter.write(self, iterator)
 
     def commit(self, messages, batchId: int):
-        files = self._all_files(messages)
-        if not files:
-            return  # all-empty micro-batch: no version
-        try:
-            _commit_files_arrow(
-                self._root,
-                files,
-                mode="overwrite" if self._overwrite else "append",
-                inline_max=self._inline_max,
-            )
-        except _ArrowCommitUnsupported:
-            _TTArrowWriter.commit(self, messages)
+        _TTArrowWriter.commit(self, messages)  # empty micro-batch: no version
 
     def abort(self, messages, batchId: int):
         _TTArrowWriter.abort(self, messages)
@@ -1130,7 +725,9 @@ class VersionedParquetDataSource(DataSource):
 
     def schema(self) -> StructType:
         root = self._root()
-        manifest = _read_manifest(root, _pick_version(root, self.options))
+        manifest = tt_log.read_manifest(
+            tt_log.ArrowStore(root), _pick_version(root, self.options)
+        )
         st = _spark_schema(manifest)
         # the change-tracking column is part of the DECLARED schema when
         # asked for (Spark resolves the plan from schema(), which cannot
@@ -1156,7 +753,7 @@ class VersionedParquetDataSource(DataSource):
     def streamWriter(
         self, schema: StructType, overwrite: bool
     ) -> _TTStreamWriter:
-        return _TTStreamWriter(self._root(), overwrite, dict(self.options))
+        return _TTStreamWriter(self._root(), overwrite)
 
     def streamReader(self, schema: StructType) -> _TTStreamReader:
         return self._reader_with(schema, _TTStreamReader)

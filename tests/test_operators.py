@@ -1752,6 +1752,35 @@ class TestApplyChanges:
         apply_changes(spark, t, changes, ["k"], seq_col="seq")
         assert {(r.k, r.v) for r in spark.table(t.name).collect()} == once
 
+    def test_failed_stats_job_releases_cached_frame(self, spark):
+        """The seq path persists its annotated frame before the stats
+        aggregate; a failing aggregate must still unpersist it."""
+        from pyspark.sql import functions as F
+
+        from astro_spark.operators.cdc import apply_changes
+
+        t = self._target(spark, [(1, "a")])
+        changes = spark.createDataFrame(
+            [(1, "a1", "U", 1), (2, "b", "I", 1)],
+            "k long, v string, op string, seq long",
+        ).withColumn(
+            "op",
+            F.when(F.col("k") == 2, F.raise_error(F.lit("boom"))).otherwise(
+                F.col("op")
+            ),
+        )
+        spark.catalog.clearCache()
+        rdds_before = spark.sparkContext._jsc.getPersistentRDDs().size()
+        with pytest.raises(Exception, match="boom"):
+            apply_changes(spark, t, changes, ["k"], seq_col="seq")
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        assert (
+            spark.sparkContext._jsc.getPersistentRDDs().size() == rdds_before
+        )
+        assert {(r.k, r.v) for r in spark.table(t.name).collect()} == {
+            (1, "a")
+        }
+
     def test_duplicate_keys_without_seq_raise(self, spark):
         import pytest
 
@@ -2514,18 +2543,19 @@ class TestTimeTravel:
         ConcurrentWriteError (overwrite path) or retries transparently
         (append path, whose intent is state-independent)."""
         from astro_spark.operators import timetravel as tt
+        from astro_spark.sources import tt_log
 
         root = self._seed(spark, tmp_path)
         # simulate a racing writer: pre-commit version 1 behind our back
-        HPath, _p, fs = tt._fs(spark, root)
-        tt._publish(
-            spark, fs, HPath, root, 1,
+        store = tt._store(spark, root)
+        tt_log.publish(
+            store, 1,
             {"files": [], "op": "rival", "ts": 0.0},
         )
         with pytest.raises(a.exceptions.AstroSparkError):
             # overwrite races for v1 -> surfaced conflict
-            tt._publish(
-                spark, fs, HPath, root, 1,
+            tt_log.publish(
+                store, 1,
                 {"files": [], "op": "loser", "ts": 0.0},
             )
         # append retries onto v2 and succeeds
@@ -2536,13 +2566,15 @@ class TestTimeTravel:
 
     def test_publish_falls_back_without_hardlinks(self, spark, tmp_path, monkeypatch):
         """ADVICE r15: on mounts without hard-link support, link(2)
-        raises EPERM/ENOTSUP — both publish paths must fall back to the
-        old O_CREAT|O_EXCL write (full content, losing race surfaced)."""
+        raises EPERM/ENOTSUP — publish must fall back to the old
+        O_CREAT|O_EXCL write (full content, losing race surfaced), from
+        the session store and the data source's pyarrow store alike."""
+        import errno
         import json as _json
         import os as _os
 
         from astro_spark.operators import timetravel as tt
-        from astro_spark.sources import tt_datasource as ds
+        from astro_spark.sources import tt_log
 
         root = self._seed(spark, tmp_path)
 
@@ -2550,26 +2582,62 @@ class TestTimeTravel:
             raise PermissionError("Operation not permitted")
 
         monkeypatch.setattr(_os, "link", no_link)
-        HPath, _p, fs = tt._fs(spark, root)
-        tt._publish(
-            spark, fs, HPath, root, 1, {"files": [], "op": "nolink", "ts": 0.0}
-        )
-        man = _json.load(
-            open(f"{root}/{tt._LOG}/{tt._manifest_name(1)}")
-        )
+        store = tt._store(spark, root)
+        tt_log.publish(store, 1, {"files": [], "op": "nolink", "ts": 0.0})
+        man = _json.load(open(f"{root}/{tt_log.manifest_ref(1)}"))
         assert man["op"] == "nolink"
         with pytest.raises(a.exceptions.AstroSparkError):
-            tt._publish(
-                spark, fs, HPath, root, 1, {"files": [], "op": "loser", "ts": 0.0}
+            tt_log.publish(
+                store, 1, {"files": [], "op": "loser", "ts": 0.0}
             )
-        # the Arrow (datasource commit-runner) twin
-        ds._atomic_publish_arrow(root, 2, {"files": [], "op": "arrow", "ts": 0.0})
-        man2 = _json.load(open(f"{root}/{tt._LOG}/{tt._manifest_name(2)}"))
+        # the data source's commit-runner store
+        arrow = tt_log.ArrowStore(root)
+        tt_log.publish(arrow, 2, {"files": [], "op": "arrow", "ts": 0.0})
+        man2 = _json.load(open(f"{root}/{tt_log.manifest_ref(2)}"))
         assert man2["op"] == "arrow"
-        with pytest.raises(ds._ArrowCommitRace):
-            ds._atomic_publish_arrow(
-                root, 2, {"files": [], "op": "loser", "ts": 0.0}
+        with pytest.raises(a.exceptions.ConcurrentWriteError):
+            tt_log.publish(
+                arrow, 2, {"files": [], "op": "loser", "ts": 0.0}
             )
+
+        # only a mount without hard links falls back: a real link(2)
+        # failure (ENOSPC, EIO, ...) propagates and leaves no manifest
+        def full_disk(src, dst, *args, **kwargs):
+            raise OSError(errno.ENOSPC, "No space left on device")
+
+        monkeypatch.setattr(_os, "link", full_disk)
+        with pytest.raises(OSError) as err:
+            tt_log.publish(store, 3, {"files": [], "op": "full", "ts": 0.0})
+        assert err.value.errno == errno.ENOSPC
+        assert sorted(_os.listdir(f"{root}/{tt_log.LOG}")) == [
+            tt_log.manifest_ref(v).split("/")[-1] for v in (0, 1, 2)
+        ]
+
+    def test_hadoop_store_speaks_the_same_log(self, spark, tmp_path):
+        """The Hadoop store (the path for Hadoop-only schemes) gives the
+        log the same four byte primitives as the pyarrow store: what one
+        writes, the other reads, and a taken version slot loses."""
+        from astro_spark.operators import timetravel as tt
+        from astro_spark.sources import tt_log
+
+        root = self._seed(spark, tmp_path)
+        hs, arrow = tt._HadoopStore(spark, root), tt_log.ArrowStore(root)
+        assert hs.list_names("no/such/dir") == []
+        assert tt_log.list_versions(hs) == tt_log.list_versions(arrow) == [0]
+        v0 = tt_log.read_manifest(hs, 0)
+        assert v0 == tt_log.read_manifest(arrow, 0)
+        tt_log.publish(
+            hs, 1,
+            {**tt_log.copy_body(v0), "op": "hadoop", "ts": 1.0,
+             "schema": v0["schema"]},
+        )
+        with pytest.raises(a.exceptions.ConcurrentWriteError):
+            tt_log.publish(hs, 1, {"files": [], "op": "loser", "ts": 2.0})
+        assert tt_log.read_manifest(arrow, 1)["op"] == "hadoop"
+        ref = tt_log.write_checkpoint(hs, v0["files"], {})
+        assert tt_log.resolve(arrow, {"base": ref})[0] == v0["files"]
+        got = {(r.k, r.v) for r in a.tt_read(spark, root).collect()}
+        assert got == {(1, "a"), (2, "b")}
 
     def test_vacuum_reclaims_only_dead_files(self, spark, tmp_path):
         root = self._seed(spark, tmp_path)
@@ -2618,6 +2686,7 @@ class TestTimeTravel:
         reference (their part-files are byte-identical paths), and the
         pre-merge version stays readable."""
         from astro_spark.operators import timetravel as tt
+        from astro_spark.sources import tt_log
 
         root = str(tmp_path / "ttm")
         # two files: k=1..2 in one, k=3..4 in the other
@@ -2626,8 +2695,8 @@ class TestTimeTravel:
         a.tt_append(
             spark, spark.createDataFrame([(3, "c"), (4, "d")], "k long, v string"), root
         )
-        HPath, _p, fs = tt._fs(spark, root)
-        before = set(tt._read_manifest(spark, fs, HPath, root, 1)["files"])
+        store = tt._store(spark, root)
+        before = set(tt_log.read_manifest(store, 1)["files"])
 
         src = spark.createDataFrame(
             [(2, "B2"), (2, "ZZZ"), (5, "e")], "k long, v string"
@@ -2640,11 +2709,12 @@ class TestTimeTravel:
         pre = {(r.k, r.v) for r in a.tt_read(spark, root, 1).collect()}
         assert pre == {(1, "a"), (2, "b"), (3, "c"), (4, "d")}
         # the k=3..4 file was NOT rewritten: its manifest entry carries over
-        after = set(tt._read_manifest(spark, fs, HPath, root, 2)["files"])
+        after = set(tt_log.read_manifest(store, 2)["files"])
         assert before & after, "untouched file should carry over by reference"
 
     def test_delete_where_rewrites_only_touched_files(self, spark, tmp_path):
         from astro_spark.operators import timetravel as tt
+        from astro_spark.sources import tt_log
 
         root = str(tmp_path / "ttd")
         a.tt_create(
@@ -2653,8 +2723,8 @@ class TestTimeTravel:
         a.tt_append(
             spark, spark.createDataFrame([(3, "c"), (4, "d")], "k long, v string"), root
         )
-        HPath, _p, fs = tt._fs(spark, root)
-        before = set(tt._read_manifest(spark, fs, HPath, root, 1)["files"])
+        store = tt._store(spark, root)
+        before = set(tt_log.read_manifest(store, 1)["files"])
         v = a.tt_delete_where(spark, root, "k = 2")
         assert v == 2
         got = {(r.k, r.v) for r in a.tt_read(spark, root).collect()}
@@ -2663,7 +2733,7 @@ class TestTimeTravel:
         assert (2, "b") in {
             (r.k, r.v) for r in a.tt_read(spark, root, 1).collect()
         }
-        after = set(tt._read_manifest(spark, fs, HPath, root, 2)["files"])
+        after = set(tt_log.read_manifest(store, 2)["files"])
         assert before & after, "file without matches should carry over"
         # no-match predicate: NO new version
         assert a.tt_delete_where(spark, root, "k = 999") == 2
@@ -2675,6 +2745,7 @@ class TestTimeTravel:
         Morton-clustered) as a NEW version with identical rows; the
         pre-optimize version still reads its old file list."""
         from astro_spark.operators import timetravel as tt
+        from astro_spark.sources import tt_log
 
         root = str(tmp_path / "tto")
         rows = [(i, i % 7) for i in range(200)]
@@ -2687,9 +2758,9 @@ class TestTimeTravel:
         assert v == 1
         got = sorted((r.k, r.g) for r in a.tt_read(spark, root).collect())
         assert got == sorted(rows)
-        HPath, _p, fs = tt._fs(spark, root)
-        m0 = tt._read_manifest(spark, fs, HPath, root, 0)
-        m1 = tt._read_manifest(spark, fs, HPath, root, 1)
+        store = tt._store(spark, root)
+        m0 = tt_log.read_manifest(store, 0)
+        m1 = tt_log.read_manifest(store, 1)
         assert len(m1["files"]) <= 2 < len(m0["files"])
         assert m1["op"] == "optimize(zorder=k,g)"
         # plain compaction too
@@ -2778,6 +2849,7 @@ class TestTimeTravel:
         from pyspark.sql import functions as F
 
         from astro_spark.operators import timetravel as tt
+        from astro_spark.sources import tt_log
 
         root = str(tmp_path / "ttskip")
         # 4 range-partitioned files: k in [0,25), [25,50), ...
@@ -2785,8 +2857,8 @@ class TestTimeTravel:
             F.col("id").alias("k"), (F.col("id") % 7).alias("g")
         ).repartitionByRange(4, "k")
         a.tt_create(spark, df, root, stats_cols=["k"])
-        HPath, _p, fs = tt._fs(spark, root)
-        m0 = tt._read_manifest(spark, fs, HPath, root, 0)
+        store = tt._store(spark, root)
+        m0 = tt_log.read_manifest(store, 0)
         assert len(m0["stats"]) == len(m0["files"]) == 4
 
         full = a.tt_read(spark, root)
@@ -2815,8 +2887,8 @@ class TestTimeTravel:
             root, ["k"],
         )
         a.tt_optimize(spark, root, target_files=3, zorder_by=["k"])
-        head = tt._read_manifest(
-            spark, fs, HPath, root, tt._list_versions(fs, HPath, root)[-1]
+        head = tt_log.read_manifest(
+            store, tt_log.list_versions(store)[-1]
         )
         assert set(head["stats"]) == set(head["files"])
         got = a.tt_read(spark, root, skip_by={"k": (1000, None)})
@@ -3329,7 +3401,7 @@ class TestDmlSql:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from astro_spark.sources.tt_datasource import _commit_files_arrow
+        from astro_spark.sources.tt_datasource import _commit_arrow
 
         root = str(tmp_path / "props")
         a.tt_create(
@@ -3354,7 +3426,7 @@ class TestDmlSql:
                       "v": pa.array([30], pa.int64())}),
             f"{root}/files/pbatch/part-0.parquet",
         )
-        _commit_files_arrow(root, ["files/pbatch/part-0.parquet"], "append")
+        _commit_arrow(root, ["files/pbatch/part-0.parquet"], "append")
         assert a.tt_properties(spark, root) == {
             "owner": "ml-team",
             "retention": "30d",
@@ -3831,6 +3903,7 @@ class TestDmlSql:
         import os
 
         from astro_spark.operators import timetravel as tt
+        from astro_spark.sources import tt_log
 
         root = str(tmp_path / "ttorph")
         spark.conf.set("spark.astro.tt.inlineFilesMax", "1")
@@ -3845,12 +3918,12 @@ class TestDmlSql:
             a.tt_append(
                 spark, spark.createDataFrame([(9, 9)], "k long, v long"), root
             )  # >1 files -> checkpointed manifest
-            HPath, _p, fs = tt._fs(spark, root)
-            head_v, head_m = tt._head(spark, fs, HPath, root)
+            store = tt._store(spark, root)
+            head_v, head_m = tt_log.head(store)
             assert "base" in head_m  # the live checkpoint exists
-            files, stats = tt._resolve(spark, fs, HPath, root, head_m)
-            orphan = tt._write_checkpoint(
-                spark, fs, HPath, root, files, stats
+            files, stats = tt_log.resolve(store, head_m)
+            orphan = tt_log.write_checkpoint(
+                store, files, stats
             )  # simulates a commit retry that lost the publish race
             names = lambda: {
                 f for f in os.listdir(f"{root}/_log") if f.startswith("ckpt-")
@@ -4077,6 +4150,7 @@ class TestDmlSql:
         state, not just bumping a number.  The rival's rows and ours
         must both survive."""
         from astro_spark.operators import timetravel as tt
+        from astro_spark.sources import tt_log
 
         spark.conf.set("spark.astro.tt.inlineFilesMax", "1")
         try:
@@ -4093,16 +4167,16 @@ class TestDmlSql:
             a.tt_append(
                 spark, spark.createDataFrame([(3, 30)], "k long, v long"), root
             )
-            HPath, _p, fs = tt._fs(spark, root)
-            head, m1 = tt._head(spark, fs, HPath, root)
+            store = tt._store(spark, root)
+            head, m1 = tt_log.head(store)
             assert head == 1 and "base" in m1  # checkpoint form active
             # now simulate OUR append losing the race for version 2:
             # pre-publish a rival v2, then append — the retry loop must
             # land on v3 with a body built against v2's state
-            rival_files, _ = tt._resolve(spark, fs, HPath, root, m1)
-            tt._publish(
-                spark, fs, HPath, root, 2,
-                {**tt._copy_body(m1), "op": "rival", "ts": 0.0,
+            rival_files, _ = tt_log.resolve(store, m1)
+            tt_log.publish(
+                store, 2,
+                {**tt_log.copy_body(m1), "op": "rival", "ts": 0.0,
                  "schema": m1.get("schema")},
             )
             v = a.tt_append(
@@ -4666,10 +4740,10 @@ class TestPartitionedVersioned:
             p.name for p in (tmp_path / "ow" / "_log").glob("v*.json")
         )
         m1 = _json.load(open(root + f"/_log/{heads[-1]}"))
-        from astro_spark.operators.timetravel import _fs, _resolve
+        from astro_spark.operators.timetravel import _store
+        from astro_spark.sources import tt_log
 
-        HPath, _p, fs = _fs(spark, root)
-        files1, stats1 = _resolve(spark, fs, HPath, root, m1)
+        files1, stats1 = tt_log.resolve(_store(spark, root), m1)
         # r=1 compacted into fewer files; every other file untouched
         r1_after = [f for f in files1 if stats1[f]["r"] == [1, 1]]
         assert len(r1_after) < len(r1_before)
@@ -4814,11 +4888,12 @@ class TestPartitionedVersioned:
             results_format="list",
         )[0].committed_version
         assert v == 1
-        from astro_spark.operators.timetravel import _fs, _head, _resolve
+        from astro_spark.operators.timetravel import _store
+        from astro_spark.sources import tt_log
 
-        HPath, _p, fs = _fs(spark, root)
-        _v, m1 = _head(spark, fs, HPath, root)
-        files1, stats1 = _resolve(spark, fs, HPath, root, m1)
+        store = _store(spark, root)
+        _v, m1 = tt_log.head(store)
+        files1, stats1 = tt_log.resolve(store, m1)
         assert set(untouched) <= set(files1)
         assert a.tt_read(spark, root).count() == 400
         assert sorted(
@@ -5004,17 +5079,15 @@ class TestRound14AdviceFixes:
         """Offset-aware stat strings (old Arrow-commit manifests) vs
         naive predicate literals must KEEP the file, never raise
         (ADVICE r13 #1)."""
-        from astro_spark.operators.timetravel import _skip_provable
-        from astro_spark.sources.tt_datasource import _skip_provable_ds
+        from astro_spark.sources.tt_log import skip_provable
 
         rng = ["2024-03-01 10:00:00+00:00", "2024-03-02 10:00:00+00:00"]
-        for fn in (_skip_provable, _skip_provable_ds):
-            assert fn(rng, None, "2024-01-01 00:00:00") is False
-            assert fn(rng, "2024-12-01 00:00:00", None) is False
-            # aware-vs-aware still prunes in time space
-            assert (
-                fn(rng, "2024-06-01 00:00:00+00:00", None) is True
-            )
+        assert skip_provable(rng, None, "2024-01-01 00:00:00") is False
+        assert skip_provable(rng, "2024-12-01 00:00:00", None) is False
+        # aware-vs-aware still prunes in time space
+        assert (
+            skip_provable(rng, "2024-06-01 00:00:00+00:00", None) is True
+        )
 
     def test_arrow_stats_serialize_naive_local(self, tmp_path):
         """_file_stats_arrow must store tz-aware timestamp bounds as
@@ -5103,15 +5176,12 @@ class TestRound14AdviceFixes:
             f"CREATE OR REPLACE TABLE '{root}' USING DELTA AS "
             "SELECT id AS k, id % 2 AS r FROM range(8)",
         )
-        from astro_spark.operators.timetravel import (
-            _fs,
-            _head,
-            _partition_cols_of,
-        )
+        from astro_spark.operators.timetravel import _store
+        from astro_spark.sources.tt_log import head as _head
+        from astro_spark.sources.tt_log import partition_cols_of
 
-        HPath, _p, fs = _fs(spark, root)
-        _v, head = _head(spark, fs, HPath, root)
-        assert _partition_cols_of(head) == []
+        _v, head = _head(_store(spark, root))
+        assert partition_cols_of(head) == []
         assert a.tt_read(spark, root).count() == 8
 
     def test_load_file_layout_mismatch_on_existing(self, spark, tmp_path):
@@ -5150,8 +5220,8 @@ class TestRound14AdviceFixes:
 
 class TestConcurrentWriters:
     """Round-14: Delta-style WriteSerializable conflict resolution for
-    copy-on-write commits (_publish_cow).  The interleaved commit is
-    INJECTED at the loser's publish point (monkeypatched _publish), so
+    copy-on-write commits (tt_log.publish_cow).  The interleaved commit is
+    INJECTED at the loser's publish point (monkeypatched tt_log.publish), so
     every schedule is deterministic — the threaded linearizability
     property lives in test_properties.py."""
 
@@ -5166,21 +5236,21 @@ class TestConcurrentWriters:
         return root
 
     def _race(self, monkeypatch, interleave):
-        """Patch timetravel._publish so the FIRST publish of a COW op
+        """Patch tt_log.publish so the FIRST publish of a COW op
         runs ``interleave()`` first — the injected commit takes the
         version slot, forcing the outer writer through the rebase."""
-        import astro_spark.operators.timetravel as tt
+        import astro_spark.sources.tt_log as tt_log
 
-        orig = tt._publish
+        orig = tt_log.publish
         state = {"armed": True}
 
-        def racing(spark, fs, HPath, root, version, manifest):
+        def racing(store, version, manifest):
             if state["armed"] and manifest.get("op") not in (None, "create"):
                 state["armed"] = False
                 interleave()
-            return orig(spark, fs, HPath, root, version, manifest)
+            return orig(store, version, manifest)
 
-        monkeypatch.setattr(tt, "_publish", racing)
+        monkeypatch.setattr(tt_log, "publish", racing)
 
     def test_disjoint_partitions_both_land(self, spark, tmp_path, monkeypatch):
         root = self._seed(spark, tmp_path)

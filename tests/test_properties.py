@@ -1175,7 +1175,7 @@ class TestTimeTravelProperties:
 
 
 class TestArrowCommitEquivalence:
-    """The Spark-free stream-sink commit (`_commit_files_arrow`) must be
+    """The Spark-free stream-sink commit (`_commit_arrow`) must be
     SEMANTICALLY IDENTICAL to the JVM log transaction
     (`tt_commit_files`) — same resolved file lists, same skipping
     stats, same schema, same read-back — across random append
@@ -1205,7 +1205,8 @@ class TestArrowCommitEquivalence:
 
         import astro_spark as a
         from astro_spark.operators import timetravel as tt
-        from astro_spark.sources.tt_datasource import _commit_files_arrow
+        from astro_spark.sources import tt_log
+        from astro_spark.sources.tt_datasource import _commit_arrow
 
         base = tmp_path_factory.mktemp("arroweq") / _uuid.uuid4().hex
         r_jvm, r_arw = str(base / "jvm"), str(base / "arw")
@@ -1226,7 +1227,7 @@ class TestArrowCommitEquivalence:
                     os.makedirs(f"{root}/files/batch_{i}", exist_ok=True)
                     pq.write_table(t, f"{root}/{rel}")
                 tt.tt_commit_files(spark, r_jvm, [rel])
-                _commit_files_arrow(r_arw, [rel], "append", inline_max=inline_max)
+                _commit_arrow(r_arw, [rel], "append", inline_max=inline_max)
             # identical read-back at EVERY version
             for ver in range(len(batches) + 1):
                 gj = sorted(
@@ -1239,13 +1240,12 @@ class TestArrowCommitEquivalence:
                 )
                 assert gj == ga, f"version {ver} diverged"
             # identical resolved file lists + skipping stats at head
-            HPj, _pj, fsj = tt._fs(spark, r_jvm)
-            HPa, _pa, fsa = tt._fs(spark, r_arw)
-            vj, mj = tt._head(spark, fsj, HPj, r_jvm)
-            va, ma = tt._head(spark, fsa, HPa, r_arw)
+            sj_store, sa_store = tt._store(spark, r_jvm), tt._store(spark, r_arw)
+            vj, mj = tt_log.head(sj_store)
+            va, ma = tt_log.head(sa_store)
             assert vj == va
-            fj, sj = tt._resolve(spark, fsj, HPj, r_jvm, mj)
-            fa, sa = tt._resolve(spark, fsa, HPa, r_arw, ma)
+            fj, sj = tt_log.resolve(sj_store, mj)
+            fa, sa = tt_log.resolve(sa_store, ma)
             # v0's seed files carry per-table UUID (hex) names; the BATCH
             # files use a non-hex prefix and identical relative paths —
             # those must match exactly, and the overall count too
@@ -1256,7 +1256,7 @@ class TestArrowCommitEquivalence:
                 f: s for f, s in sa.items() if f.startswith("files/batch_")
             }  # exact same [min, max] per batch file per column
             assert mj.get("schema") == ma.get("schema")
-            assert tt._stats_cols_of(mj) == tt._stats_cols_of(ma)
+            assert tt_log.stats_cols_of(mj) == tt_log.stats_cols_of(ma)
             # stats-based pruning behaves identically
             nj = a.tt_read(spark, r_jvm, where="k >= 40").count()
             na = a.tt_read(spark, r_arw, where="k >= 40").count()

@@ -187,6 +187,21 @@ class TestCappedInference:
         assert df.count() == 10
         assert dict(df.dtypes)["r_regionkey"] in ("int", "bigint")
 
+    def test_header_only_first_part(self, spark, tmp_path):
+        """A header-only first part file (Spark's output for an empty
+        split) must not type every column STRING: inference samples the
+        first file that holds a data row."""
+        d = tmp_path / "parts"
+        d.mkdir()
+        (d / "part-00000.csv").write_text("k,x,name\n")
+        (d / "part-00001.csv").write_text("k,x,name\n1,2.5,a\n2,3.5,b\n")
+        df = a.load_file(spark, a.File(str(d), filetype=a.FileType.CSV))
+        assert df.count() == 2
+        types = dict(df.dtypes)
+        assert types["k"] in ("int", "bigint")
+        assert types["x"] == "double"
+        assert types["name"] == "string"
+
     def test_small_sample_cap(self, spark, sf_dir, tmp_path):
         li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
         p = str(tmp_path / "li.csv")
@@ -688,7 +703,7 @@ class TestVersionedParquetDataSource:
         import astro_spark as a
         from astro_spark.sources.tt_datasource import (
             _ArrowCommitUnsupported,
-            _commit_files_arrow,
+            _commit_arrow,
         )
 
         root = str(tmp_path / "sfree")
@@ -711,7 +726,7 @@ class TestVersionedParquetDataSource:
                       "v": pa.array([500, 600], pa.int64())}),
             f"{root}/{commit_dir}/part-0.parquet",
         )
-        v = _commit_files_arrow(root, [f"{commit_dir}/part-0.parquet"], "append")
+        v = _commit_arrow(root, [f"{commit_dir}/part-0.parquet"], "append")
         assert v == 1
         # the native reader sees the commit; stats were recorded exactly
         assert a.tt_read(spark, root).count() == 6
@@ -728,7 +743,7 @@ class TestVersionedParquetDataSource:
             f"{root}/{commit_dir}/part-drift.parquet",
         )
         with pytest.raises(_ArrowCommitUnsupported):
-            _commit_files_arrow(
+            _commit_arrow(
                 root, [f"{commit_dir}/part-drift.parquet"], "append"
             )
         # constrained tables defer too (constraints are Spark SQL)
@@ -739,7 +754,7 @@ class TestVersionedParquetDataSource:
             f"{root}/{commit_dir}/part-1.parquet",
         )
         with pytest.raises(_ArrowCommitUnsupported):
-            _commit_files_arrow(
+            _commit_arrow(
                 root, [f"{commit_dir}/part-1.parquet"], "append"
             )
         # checkpoint compaction past the knob, readable by the JVM side
@@ -757,7 +772,7 @@ class TestVersionedParquetDataSource:
                       "v": pa.array([9], pa.int64())}),
             f"{root2}/{commit_dir}/part-0.parquet",
         )
-        v = _commit_files_arrow(
+        v = _commit_arrow(
             root2, [f"{commit_dir}/part-0.parquet"], "append", inline_max=2
         )
         m2 = _json.loads(open(f"{root2}/_log/v00000001.json").read())
@@ -914,7 +929,7 @@ class TestVersionedParquetDataSource:
         import astro_spark as a
         from astro_spark.sources.tt_datasource import (
             _ArrowCommitUnsupported,
-            _commit_files_arrow,
+            _commit_arrow,
         )
 
         root = str(tmp_path / "corrupt")
@@ -925,7 +940,7 @@ class TestVersionedParquetDataSource:
         with open(f"{root}/files/bad/part-0.parquet", "wb") as fh:
             fh.write(b"this is not parquet")
         with pytest.raises(_ArrowCommitUnsupported):
-            _commit_files_arrow(root, ["files/bad/part-0.parquet"], "append")
+            _commit_arrow(root, ["files/bad/part-0.parquet"], "append")
         # the table is untouched — no version published
         assert a.tt_history(spark, root).count() == 1
 

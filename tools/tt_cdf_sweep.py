@@ -40,22 +40,21 @@ def build(spark, root: str, n_entries: int, churn: int) -> int:
     the version the change feed should start from."""
     import astro_spark as a
     from astro_spark.operators import timetravel as tt
+    from astro_spark.sources import tt_log
 
     a.tt_create(
         spark, spark.createDataFrame([(0, 0)], "k long, v long"), root
     )
     HPath, _p, fs = tt._fs(spark, root)
-    m0 = tt._read_manifest(spark, fs, HPath, root, 0)
+    store = tt._store(spark, root)
+    m0 = tt_log.read_manifest(store, 0)
     real = list(m0["files"])
     fakes = [
         f"files/synthetic/part-{i:07d}.parquet" for i in range(n_entries)
     ]
-    ckpt = tt._write_checkpoint(spark, fs, HPath, root, fakes + real, {})
-    tt._publish(
-        spark,
-        fs,
-        HPath,
-        root,
+    ckpt = tt_log.write_checkpoint(store, fakes + real, {})
+    tt_log.publish(
+        store,
         1,
         {
             "base": ckpt,
@@ -77,15 +76,12 @@ def build(spark, root: str, n_entries: int, churn: int) -> int:
             fs,
             HPath,
         )
-        m_prev = tt._read_manifest(spark, fs, HPath, root, 1 + i)
-        body = tt._body_delta(
-            spark, fs, HPath, root, m_prev, new, [prev_real], {}
+        m_prev = tt_log.read_manifest(store, 1 + i)
+        body = tt_log.body_delta(
+            store, m_prev, new, [prev_real], {}, tt._inline_max(spark)
         )
-        tt._publish(
-            spark,
-            fs,
-            HPath,
-            root,
+        tt_log.publish(
+            store,
             2 + i,
             {**body, "op": "churn", "ts": time.time(), "schema": m0["schema"]},
         )
