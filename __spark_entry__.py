@@ -5500,13 +5500,13 @@ def _op_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a crash during a copy-on-write data write), vacuum it away, prove
     idempotence and that live data survives untouched."""
     from astro_spark.operators.catalog import vacuum_table
-    from astro_spark.operators.merge import _parquet_location
+    from astro_spark.operators.merge import _table_layout
 
     _views(spark, sf_dir)
     tname = f"op_vacuum_{uuid.uuid4().hex[:8]}"
     read_table(spark, sf_dir, "nation").write.format("parquet").saveAsTable(tname)
     t = a.Table(tname, temp=False)
-    loc = _parquet_location(spark, tname).removeprefix("file:")
+    loc = _table_layout(spark, tname).parquet_location.removeprefix("file:")
     stage = os.path.join(loc, ".cow_stage_deadbeef")
     os.makedirs(stage, exist_ok=True)
     with open(os.path.join(stage, "part-junk.parquet"), "wb") as f:
@@ -5730,7 +5730,7 @@ def _op_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     the write-ahead-manifest redo pass."""
     from astro_spark.operators.catalog import recover_table
     from astro_spark.operators.merge import (
-        _parquet_location,
+        _table_layout,
         _write_cow_manifest,
     )
 
@@ -5739,7 +5739,7 @@ def _op_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = read_table(spark, sf_dir, "nation")
     nation.write.format("parquet").saveAsTable(tname)
     t = a.Table(tname, temp=False)
-    loc = _parquet_location(spark, tname)
+    loc = _table_layout(spark, tname).parquet_location
     jvm = spark._jvm
     HPath = jvm.org.apache.hadoop.fs.Path
     root = HPath(loc)

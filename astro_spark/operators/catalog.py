@@ -174,16 +174,12 @@ def auto_compact(
     """
     from ..sources.writers import _hadoop_fs
     from ..table import Table as _Table
+    from .merge import _table_layout
 
     t = table if isinstance(table, _Table) else _Table(str(table), temp=False)
-    loc = (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {t.qualified_name}")
-        .where("col_name = 'Location'")
-        .collect()
-    )
-    if not loc:
+    path = _table_layout(spark, t.qualified_name).location
+    if path is None:
         return 0
-    path = loc[0]["data_type"]
     fs, _jvm, jpath = _hadoop_fs(spark, path)
     it = fs.listFiles(jpath, True)
     small = 0
@@ -220,10 +216,10 @@ def vacuum_table(spark: SparkSession, table: Table | str) -> int:
     ``recover_table`` (run recovery first, then vacuum).
     """
     from ..table import Table as _Table
-    from .merge import _parquet_location
+    from .merge import _table_layout
 
     t = table if isinstance(table, _Table) else _Table(str(table), temp=False)
-    location = _parquet_location(spark, t.qualified_name)
+    location = _table_layout(spark, t.qualified_name).parquet_location
     if location is None:
         return 0
     HPath, root, fs = _table_fs(spark, location)
@@ -285,10 +281,10 @@ def recover_table(spark: SparkSession, table: Table | str) -> int:
     import json
 
     from ..table import Table as _Table
-    from .merge import _parquet_location
+    from .merge import _table_layout
 
     t = table if isinstance(table, _Table) else _Table(str(table), temp=False)
-    location = _parquet_location(spark, t.qualified_name)
+    location = _table_layout(spark, t.qualified_name).parquet_location
     if location is None:
         return 0
     HPath, root, fs = _table_fs(spark, location)

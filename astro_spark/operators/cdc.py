@@ -66,8 +66,7 @@ from .merge import (
     _cow_stage_partitioned,
     _cow_swap_files,
     _no_partition_moves,
-    _parquet_location,
-    _partition_columns,
+    _table_layout,
     _upsert,
     merge,
 )
@@ -301,10 +300,10 @@ def _apply_fused(
     ineligible, including a touched set over ``MAX_TOUCHED_FILES``.
     """
     name = target_table.qualified_name
-    location = _parquet_location(spark, name)
+    layout = _table_layout(spark, name)
+    location, part_cols = layout.parquet_location, layout.partition_cols
     if location is None:
         return False
-    part_cols = _partition_columns(spark, target_table)
     tgt = spark.table(name)
     tbl_cols = tgt.columns
     try:
@@ -444,7 +443,7 @@ def expire_applied_seq(
     if n == 0:
         return 0
     kept = marked.where(~dead_expired).drop("__live")
-    location = _parquet_location(spark, sidecar.qualified_name)
+    location = _table_layout(spark, sidecar.qualified_name).parquet_location
     if location is not None:
         old_files = list(spark.table(sidecar.qualified_name).inputFiles())
         _cow_swap_files(

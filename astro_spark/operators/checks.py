@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans.literal import literal_rows_df
 from ..table import Table
 
 _METRICS = ("null_check", "distinct_check", "unique_check", "min", "max")
@@ -79,9 +80,12 @@ def check_column(
     """Run all column checks in one aggregate pass.
 
     ``column_mapping``: {column: {metric: {comparison: value, tolerance: t}}}
-    Returns a DataFrame (col_name, check_name, value, passed); raises on
-    any failure when ``raise_on_failure`` (reference raises
-    AirflowException listing failed checks).
+    Returns a DataFrame ``(col_name string, check_name string, value
+    double, passed boolean)`` built driver-side as a ``LocalRelation``
+    (collecting it runs no Spark job; ``value`` is NULL for a
+    non-numeric min/max); raises on any failure when
+    ``raise_on_failure`` (reference raises AirflowException listing
+    failed checks).
     """
     df = spark.table(table.qualified_name) if isinstance(table, Table) else table
     if partition_clause:
@@ -113,7 +117,9 @@ def check_column(
             numeric = None  # min/max of string/timestamp columns
         results.append(Row(col_name=col, check_name=metric, value=numeric, passed=passed))
 
-    out = spark.createDataFrame(results)
+    out = literal_rows_df(
+        spark, results, "col_name string, check_name string, value double, passed boolean"
+    )
     if raise_on_failure:
         failed = [r for r in results if not r.passed]
         if failed:
@@ -132,7 +138,9 @@ def check_table(
 
     Each check runs as ``SELECT CAST(<stmt> AS BOOLEAN) ... FROM t`` —
     combined into a single scan via one SELECT of all statements
-    (reference wraps each separately, check_table.py:59).
+    (reference wraps each separately, check_table.py:59).  Returns
+    ``(check_name string, passed boolean)`` as a driver-side
+    ``LocalRelation``: collecting it runs no Spark job.
     """
     where = f" WHERE {partition_clause}" if partition_clause else ""
     exprs = ", ".join(
@@ -143,7 +151,7 @@ def check_table(
         f"SELECT {exprs} FROM {table.qualified_name}{where}"
     ).collect()[0]
     results = [Row(check_name=name, passed=bool(row[name])) for name in checks]
-    out = spark.createDataFrame(results)
+    out = literal_rows_df(spark, results, "check_name string, passed boolean")
     if raise_on_failure:
         failed = [r.check_name for r in results if not r.passed]
         if failed:
@@ -256,9 +264,14 @@ def check_outliers(
     (n_rows, n_outliers, q1_qc, q3_qc, lo_x400, hi_x400) with quartiles
     in quarter-cents.
 
-    ``exact=True`` (default, the oracle path) uses ``percentile`` — a
-    sort-based aggregate whose per-group state is the value multiset;
-    bit-exact, fine for a data-quality gate at test scale.  At 100 TB
+    ``exact=True`` (default, the oracle path) computes the exact
+    ``percentile`` quartiles by rank selection, bit-exact, fine for a
+    data-quality gate at test scale.  It is EAGER: two or three Spark
+    jobs run at call time and ``n_rows`` and the quartiles (so the
+    fences) are snapshotted into the returned plan as literals.  A
+    frame built now and collected after ``data`` changed recounts
+    ``n_outliers`` against the OLD fences; call again to refresh.
+    ``exact=False`` stays fully lazy.  At 100 TB
     pass ``exact=False``: quartiles come from ``approx_percentile``
     (Greenwald-Khanna sketch, bounded memory, one pass, map-side
     combinable).  With the default ``accuracy=10000`` each estimated
@@ -399,16 +412,7 @@ def _exact_quartile_stats(df: DataFrame, cents: str) -> DataFrame:
                     if prefix[pid] <= idx < prefix[pid] + nn:
                         targets.append((tgt, pid, idx - prefix[pid]))
                         break
-            # JVM LocalRelation literal (the r14 Range-literal pattern):
-            # createDataFrame would run a Python-RDD job per downstream
-            # action (~0.3-1.6 s each, measured) for these 4 rows
-            values = ", ".join(
-                f"('{tgt}', {pid}, CAST({lidx} AS BIGINT))"
-                for tgt, pid, lidx in targets
-            )
-            tdf = spark.sql(
-                f"SELECT * FROM VALUES {values} AS t(tgt, pid, lidx)"
-            )
+            tdf = literal_rows_df(spark, targets, "tgt string, pid int, lidx bigint")
             wsel = (
                 Window.partitionBy("tgt")
                 .orderBy("v")

@@ -36,12 +36,12 @@ from pyspark.sql import functions as F
 from ..table import Table
 from .merge import (
     MAX_TOUCHED_FILES,
+    TableLayout,
     _cow_commit_partitioned,
     _cow_stage_partitioned,
     _cow_swap_files,
-    _parquet_location,
-    _partition_columns,
     _swap_table,
+    _table_layout,
 )
 
 
@@ -50,24 +50,22 @@ def _as_table(table: Table | str) -> Table:
 
 
 def _touched_files(
-    spark: SparkSession, t: Table, cond: Column
-) -> tuple[str | None, list[str] | None, DataFrame | None]:
-    """(location, touched file list, metadata-tagged frame) for a
-    file-scoped rewrite, or (None, None, None) when ineligible:
-    non-parquet provider, no file metadata, or a touched set over
-    ``MAX_TOUCHED_FILES``.  Partitioned tables are eligible — the
-    caller decides whether rows can move partitions."""
-    name = t.qualified_name
-    location = _parquet_location(spark, name)
-    if location is None:
-        return None, None, None
-    df = spark.table(name)
+    spark: SparkSession, t: Table, layout: TableLayout, cond: Column
+) -> tuple[list[str] | None, DataFrame | None]:
+    """(touched file list, metadata-tagged frame) for a file-scoped
+    rewrite, or (None, None) when ineligible: non-parquet provider, no
+    file metadata, or a touched set over ``MAX_TOUCHED_FILES``.
+    Partitioned tables are eligible — the caller decides whether rows
+    can move partitions."""
+    if layout.parquet_location is None:
+        return None, None
+    df = spark.table(t.qualified_name)
     try:
         tagged = df.select(
             *df.columns, F.col("_metadata.file_path").alias("__file")
         )
     except Exception:  # pragma: no cover - source without file metadata
-        return None, None, None
+        return None, None
     files = [
         r[0]
         for r in tagged.where(cond)
@@ -77,8 +75,8 @@ def _touched_files(
         .collect()
     ]
     if len(files) > MAX_TOUCHED_FILES:
-        return None, None, None
-    return location, files, tagged
+        return None, None
+    return files, tagged
 
 
 def delete_rows(
@@ -96,12 +94,13 @@ def delete_rows(
         return 0
     # DELETE never moves a row between partitions → file-scoped COW is
     # safe on partitioned and unpartitioned tables alike
-    location, files, tagged = _touched_files(spark, t, cond)
+    layout = _table_layout(spark, t.qualified_name)
+    files, tagged = _touched_files(spark, t, layout, cond)
     if files is not None:
         keep = (
             tagged.where(F.col("__file").isin(files)).where(~cond).drop("__file")
         )
-        _commit_cow(spark, t, location, files, keep)
+        _commit_cow(spark, t, layout, files, keep)
         return n
     _swap_table(spark, df.where(~cond), t)
     return n
@@ -110,11 +109,11 @@ def delete_rows(
 def _commit_cow(
     spark: SparkSession,
     t: Table,
-    location: str,
+    layout: TableLayout,
     files: list[str],
     result: DataFrame,
 ) -> None:
-    part_cols = _partition_columns(spark, t)
+    location, part_cols = layout.parquet_location, layout.partition_cols
     if part_cols:
         staged = _cow_stage_partitioned(spark, location, part_cols, result)
         _cow_commit_partitioned(spark, location, files, staged)
@@ -151,8 +150,8 @@ def delete_rows_by_keys(
     t = _as_table(table)
     df = spark.table(t.qualified_name)
     keys = keys_df.select(*key_cols).distinct()
-    location = _parquet_location(spark, t.qualified_name)
-    if location is not None:
+    layout = _table_layout(spark, t.qualified_name)
+    if layout.parquet_location is not None:
         try:
             tagged = df.select(
                 *df.columns, F.col("_metadata.file_path").alias("__file")
@@ -177,7 +176,7 @@ def delete_rows_by_keys(
                 keep = touched.join(keys, on=key_cols, how="left_anti").drop(
                     "__file"
                 )
-                _commit_cow(spark, t, location, files, keep)
+                _commit_cow(spark, t, layout, files, keep)
                 return n
     # non-parquet provider / no file metadata / touched set over the cap:
     # staged swap (readers never observe a half-applied delete)
@@ -223,12 +222,12 @@ def update_rows(
 
     # UPDATE can move rows between partitions only when the set_map
     # touches a partition column — COW is safe otherwise
-    part_cols = set(_partition_columns(spark, t))
-    if not (part_cols & set(set_map)):
-        location, files, tagged = _touched_files(spark, t, cond)
+    layout = _table_layout(spark, t.qualified_name)
+    if not (set(layout.partition_cols) & set(set_map)):
+        files, tagged = _touched_files(spark, t, layout, cond)
         if files is not None:
             touched = tagged.where(F.col("__file").isin(files)).drop("__file")
-            _commit_cow(spark, t, location, files, _apply(touched))
+            _commit_cow(spark, t, layout, files, _apply(touched))
             return n
     _swap_table(spark, _apply(df), t)
     return n

@@ -86,6 +86,7 @@ import operator
 import re
 import uuid
 from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -223,22 +224,25 @@ def _merge_impl(
         return target_table
 
     # update
-    part_cols = _partition_columns(spark, target_table)
+    layout = _table_layout(spark, target_table.qualified_name)
+    part_cols = layout.partition_cols
     if part_cols and all(p in source.columns for p in part_cols):
         if _upsert_partition_scoped(
             spark, target, source, keys, target_table, part_cols
         ):
             return target_table
-    if not part_cols:
-        if _upsert_file_scoped(spark, source, keys, target_table):
-            return target_table
-    elif _no_partition_moves(target, source, keys, part_cols):
-        # matched rows keep (or re-assert) their target partition values
-        # → file-scoped COW inside the existing partition directories
-        if _upsert_file_scoped_partitioned(
-            spark, source, keys, target_table, part_cols
-        ):
-            return target_table
+    location = layout.parquet_location  # copy-on-write needs plain parquet
+    if location is not None:
+        if not part_cols:
+            if _upsert_file_scoped(spark, source, keys, target_table, location):
+                return target_table
+        elif _no_partition_moves(target, source, keys, part_cols):
+            # matched rows keep (or re-assert) their target partition
+            # values → file-scoped COW inside the existing directories
+            if _upsert_file_scoped_partitioned(
+                spark, source, keys, target_table, part_cols, location
+            ):
+                return target_table
     result = _upsert(target, source, keys)
     _swap_table(spark, result, target_table)
     return target_table
@@ -467,15 +471,59 @@ def _append_new_rows(
     spark.catalog.refreshTable(name)
 
 
-def _partition_columns(spark: SparkSession, table: Table) -> list[str]:
-    try:
-        return [
-            c.name
-            for c in spark.catalog.listColumns(table.qualified_name)
-            if c.isPartition
-        ]
-    except Exception:  # pragma: no cover - exotic catalog
-        return []
+class TableLayout(NamedTuple):
+    """What the physical strategies need to know about a catalog table."""
+
+    provider: str  # lower-case; "" when DESCRIBE lists none (views)
+    location: str | None
+    partition_cols: list[str]
+
+    @property
+    def parquet_location(self) -> str | None:
+        """The location when the table is a plain-parquet file source
+        (the only provider the copy-on-write commit understands)."""
+        return self.location if self.provider == "parquet" else None
+
+
+_V2_IDENTITY_PART = re.compile(r"`((?:[^`]|``)+)`|(\w+)")
+
+
+def _table_layout(spark: SparkSession, name: str) -> TableLayout:
+    """Provider, location and partition columns of ``name`` from ONE
+    ``DESCRIBE TABLE EXTENDED`` — a command whose result collects
+    without a Spark job.  (``spark.catalog.listColumns`` would cost four
+    one-task jobs: PySpark drains it through ``toLocalIterator``.)
+
+    Partition columns come from the v1 ``# Partition Information``
+    block (after its ``# col_name`` header) or the v2 ``# Partitioning``
+    block (``Part <i>`` rows; identity transforms only, as
+    ``listColumns`` reports them); provider and location from the rows
+    after ``# Detailed Table Information``.  A failed lookup raises: a
+    partitioned table must never be mistaken for an unpartitioned one."""
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+    detail: dict[str, str] = {}
+    parts: list[str] = []
+    section = ""
+    for r in rows:
+        key, value = r.col_name or "", r.data_type or ""
+        if key.startswith("#"):
+            if key != "# col_name":  # the column header inside a block
+                section = key
+        elif not key:
+            section = ""
+        elif section == "# Partition Information":
+            parts.append(key)
+        elif section == "# Partitioning":
+            m = _V2_IDENTITY_PART.fullmatch(value)
+            if m:
+                parts.append(m[2] or m[1].replace("``", "`"))
+        elif section == "# Detailed Table Information":
+            detail[key] = value
+    return TableLayout(
+        provider=detail.get("Provider", "").lower(),
+        location=detail.get("Location") or None,
+        partition_cols=parts,
+    )
 
 
 def _upsert_partition_scoped(
@@ -565,16 +613,12 @@ MAX_TOUCHED_FILES = 10_000
 KEY_PUSHDOWN_CAP = 1_000
 
 
-def _table_detail(spark: SparkSession, name: str) -> dict:
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
-    return {r.col_name: r.data_type for r in rows}
-
-
 def _upsert_file_scoped(
     spark: SparkSession,
     source: DataFrame,
     keys: list[str],
     target_table: Table,
+    location: str,
 ) -> bool:
     """update strategy 3: copy-on-write at parquet-file granularity.
 
@@ -594,15 +638,12 @@ def _upsert_file_scoped(
 
     Reference semantics: Delta ``MERGE INTO``
     (``databases/databricks/delta.py:357-442``) — Delta's own physical
-    plan is exactly this copy-on-write.  Returns False (caller falls
-    back to the staged swap) for non-parquet providers or a touched set
-    over ``MAX_TOUCHED_FILES``.
+    plan is exactly this copy-on-write.  ``location`` is the plain-parquet
+    table's directory (``TableLayout.parquet_location``).  Returns False
+    (caller falls back to the staged swap) for a touched set over
+    ``MAX_TOUCHED_FILES``.
     """
     name = target_table.qualified_name
-    location = _parquet_location(spark, name)
-    if location is None:
-        return False
-
     tgt = spark.table(name)
     tbl_cols = tgt.columns
     try:
@@ -648,6 +689,7 @@ def _upsert_file_scoped_partitioned(
     keys: list[str],
     target_table: Table,
     part_cols: list[str],
+    location: str,
 ) -> bool:
     """update strategy 3b: copy-on-write on a PARTITIONED target when no
     matched row changes partition (checked by ``_no_partition_moves`` —
@@ -672,10 +714,6 @@ def _upsert_file_scoped_partitioned(
     window.
     """
     name = target_table.qualified_name
-    location = _parquet_location(spark, name)
-    if location is None:
-        return False
-
     tgt = spark.table(name)
     tbl_cols = tgt.columns
     try:
@@ -779,15 +817,6 @@ def _cow_commit_partitioned(
         fs.delete(HPath(f), False)
     fs.delete(staged_path, True)
     _delete_cow_manifest(fs, HPath, dst_dir, gen)
-
-
-def _parquet_location(spark: SparkSession, name: str) -> str | None:
-    """Table location when the table is a plain-parquet file source
-    (the only provider the copy-on-write commit understands), else None."""
-    detail = _table_detail(spark, name)
-    if detail.get("Provider", "").lower() != "parquet":
-        return None
-    return detail.get("Location") or None
 
 
 def _write_cow_manifest(

@@ -14,7 +14,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.identifiers import render_sql
-from .timetravel import _literal_rows_df
+from ..plans.literal import literal_rows_df
 
 
 class QueryModifier:
@@ -118,7 +118,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
             else:
                 ts = float(val)
             v = tt_restore_to_ts(spark, m.group(1), ts)
-        return _literal_rows_df(spark, [(v,)], "restored_as_version long")
+        return literal_rows_df(spark, [(v,)], "restored_as_version long")
     m = re.match(
         r"(?is)^\s*insert\s+(into|overwrite)\s+'([^']+)'\s+(.+?)\s*;?\s*$",
         stmt,
@@ -156,7 +156,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
             v = tt_append(spark, df, m.group(2))
         else:
             v = tt_overwrite(spark, df, m.group(2))
-        return _literal_rows_df(spark, [(v,)], "committed_version long")
+        return literal_rows_df(spark, [(v,)], "committed_version long")
     m = re.match(
         r"(?is)^\s*alter\s+table\s+'([^']+)'\s+add\s+constraint\s+"
         r"`?(\w+)`?\s+check\s*\((.+)\)\s*;?\s*$",
@@ -169,7 +169,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
         v = tt_add_constraint(
             spark, m.group(1), validate_identifier(m.group(2)), m.group(3)
         )
-        return _literal_rows_df(spark, [(v,)], "committed_version long")
+        return literal_rows_df(spark, [(v,)], "committed_version long")
     m = re.match(
         r"(?is)^\s*alter\s+table\s+'([^']+)'\s+add\s+columns?\s*"
         r"\((.+)\)\s*;?\s*$",
@@ -188,7 +188,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
                 (validate_identifier(cm.group(1)), cm.group(2))
             )
         v = tt_add_columns(spark, m.group(1), cols)
-        return _literal_rows_df(spark, [(v,)], "committed_version long")
+        return literal_rows_df(spark, [(v,)], "committed_version long")
     m = re.match(
         r"(?is)^\s*alter\s+table\s+'([^']+)'\s+set\s+tblproperties\s*"
         r"\((.+)\)\s*;?\s*$",
@@ -206,7 +206,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
                 return None  # not the TBLPROPERTIES grammar: fall through
             props[pm.group(1)] = pm.group(2)
         v = tt_set_properties(spark, m.group(1), props)
-        return _literal_rows_df(spark, [(v,)], "committed_version long")
+        return literal_rows_df(spark, [(v,)], "committed_version long")
     m = re.match(
         r"(?is)^\s*alter\s+table\s+'([^']+)'\s+unset\s+tblproperties\s*"
         r"(?:if\s+exists\s*)?\((.+)\)\s*;?\s*$",
@@ -222,7 +222,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
                 return None
             keys.append(pm.group(1))
         v = tt_unset_properties(spark, m.group(1), keys)
-        return _literal_rows_df(spark, [(v,)], "committed_version long")
+        return literal_rows_df(spark, [(v,)], "committed_version long")
     m = re.match(
         r"(?is)^\s*show\s+tblproperties\s+'([^']+)'\s*;?\s*$", stmt
     )
@@ -230,7 +230,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
         from .timetravel import tt_properties
 
         props = tt_properties(spark, m.group(1))
-        return _literal_rows_df(
+        return literal_rows_df(
             spark, sorted(props.items()) or [], "key string, value string"
         )
     m = re.match(
@@ -245,7 +245,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
         v = tt_drop_constraint(
             spark, m.group(1), validate_identifier(m.group(2))
         )
-        return _literal_rows_df(spark, [(v,)], "committed_version long")
+        return literal_rows_df(spark, [(v,)], "committed_version long")
     m = re.match(
         r"(?is)^\s*optimize\s+'([^']+)'"
         r"(?:\s+where\s+(.+?))?"
@@ -265,7 +265,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
         v = tt_optimize(
             spark, m.group(1), zorder_by=zcols, where=m.group(2)
         )
-        return _literal_rows_df(spark, [(v,)], "committed_version long")
+        return literal_rows_df(spark, [(v,)], "committed_version long")
     m = re.match(
         r"(?is)^\s*create\s+table\s+"
         r"(?:'([^']+)'|([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?))\s+shallow\s+clone\s+"
@@ -286,7 +286,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
         )
         if dst_name:
             tt_register(spark, dst_name, dst_root)
-        return _literal_rows_df(spark, [(v,)], "committed_version long")
+        return literal_rows_df(spark, [(v,)], "committed_version long")
     m = re.match(
         r"(?is)^\s*create\s+(or\s+replace\s+)?table\s+"
         r"(if\s+not\s+exists\s+)?"
@@ -343,7 +343,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
             # name, return the current head — the SELECT never runs
             if name:
                 tt_register(spark, name, root)
-            return _literal_rows_df(
+            return literal_rows_df(
                 spark, [(existing[-1],)], "committed_version long"
             )
         tt_views: list[str] = []
@@ -371,7 +371,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
             v = tt_create(spark, df, root, partition_by=pcols)
         if name:
             tt_register(spark, name, root)
-        return _literal_rows_df(spark, [(v,)], "committed_version long")
+        return literal_rows_df(spark, [(v,)], "committed_version long")
     m = re.match(
         r"(?is)^\s*vacuum\s+'([^']+)'"
         r"(?:\s+retain\s+(\d+)\s+versions)?(\s+dry\s+run)?\s*;?\s*$",
@@ -384,7 +384,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
         n = tt_vacuum(
             spark, m.group(1), keep_last=keep, dry_run=bool(m.group(3))
         )
-        return _literal_rows_df(spark, [(n,)], "deleted_files long")
+        return literal_rows_df(spark, [(n,)], "deleted_files long")
     m = re.match(
         r"(?is)^\s*convert\s+to\s+delta\s+"
         r"(?:parquet\s*\.\s*)?(?:'([^']+)'|`([^`]+)`)"
@@ -404,7 +404,7 @@ def _route_timetravel_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
                 for piece in m.group(3).split(",")
             ]
         tt_convert(spark, m.group(1) or m.group(2), partition_by=pcols)
-        return _literal_rows_df(spark, [(0,)], "converted_as_version long")
+        return literal_rows_df(spark, [(0,)], "converted_as_version long")
     return None
 
 
@@ -850,7 +850,7 @@ def _route_merge_versioned_sql(
         *[F.col(s_col).alias(t_col) for s_col, t_col in col_map.items()]
     )
     v = tt_merge(spark, source, root, keys)
-    return _literal_rows_df(spark, [(v,)], "committed_version long")
+    return literal_rows_df(spark, [(v,)], "committed_version long")
 
 
 def _route_dml_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
@@ -921,7 +921,7 @@ def _route_dml_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
             from .timetravel import tt_delete_where
 
             v = tt_delete_where(spark, pm.group(1), cond or "true")
-            return _literal_rows_df(spark, [(v,)], "committed_version long")
+            return literal_rows_df(spark, [(v,)], "committed_version long")
         tm = re.match(r"(?s)^(`?\w+`?(?:\s*\.\s*`?\w+`?)?)(\s.*|$)", rest)
         if not tm:
             return None
@@ -934,7 +934,7 @@ def _route_dml_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
         from .dml import delete_rows
 
         n = delete_rows(spark, t, cond if cond is not None else "true")
-        return _literal_rows_df(spark, [(n,)], "affected_rows long")
+        return literal_rows_df(spark, [(n,)], "affected_rows long")
 
     if low.startswith("update"):
         pm = re.match(r"(?is)^update\s+'([^']+)'\s+set\s+(.+)$", s)
@@ -974,11 +974,11 @@ def _route_dml_sql(spark: SparkSession, stmt: str) -> DataFrame | None:
             from .timetravel import tt_update_where
 
             v = tt_update_where(spark, pm.group(1), set_map, cond)
-            return _literal_rows_df(spark, [(v,)], "committed_version long")
+            return literal_rows_df(spark, [(v,)], "committed_version long")
         from .dml import update_rows
 
         n = update_rows(spark, t, set_map, cond)
-        return _literal_rows_df(spark, [(n,)], "affected_rows long")
+        return literal_rows_df(spark, [(n,)], "affected_rows long")
 
     return None
 

@@ -147,12 +147,17 @@ def _infer_csv_schema_capped(
         files[0] if files else path,
     )
     head = spark.read.text(first).limit(sample_rows + 1)  # +1 header line
-    return (
-        spark.read.options(**opts)
-        .option("inferSchema", "true")
-        .csv(head.rdd.map(lambda r: r.value))
-        .schema
+    # The sample is collected inside the JVM and handed back as a local
+    # Dataset[String] to DataFrameReader.csv(Dataset[String]), the call
+    # PySpark's csv(RDD) makes after routing the lines through a Python
+    # worker.  A local dataset also spares the reader's first-line probe
+    # and the inference pass from re-running the limit as a shuffle.
+    enc = spark._jvm.org.apache.spark.sql.Encoders.STRING()
+    lines = spark._jsparkSession.createDataset(
+        getattr(head._jdf, "as")(enc).collectAsList(), enc
     )
+    reader = spark.read.options(**opts).option("inferSchema", "true")
+    return DataFrame(reader._jreader.csv(lines), spark).schema
 
 
 def _has_data_row(spark: SparkSession, path: str, header: bool) -> bool:

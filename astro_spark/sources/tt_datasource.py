@@ -427,7 +427,11 @@ def _file_stats_arrow(
     """Per-file [min, max] of the stats columns — exact, computed from
     a column-pruned Arrow read of the just-written (micro-batch-sized)
     files; int/float/string only, mirroring ``timetravel._STATS_TYPES``
-    minus decimal (whose outward float-widening stays JVM-side)."""
+    minus decimal (whose outward float-widening stays JVM-side).
+    Bounds are what Spark's ``min``/``max`` record: NaN included, and
+    ``[None, None]`` for an all-NULL column."""
+    import math
+
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -455,10 +459,18 @@ def _file_stats_arrow(
             table = pq.read_table(f"{path}/{rel}", columns=present)
             entry = {}
             for c in present:
-                mm = pc.min_max(table.column(c))
+                col = table.column(c)
+                mm = pc.min_max(col)
                 lo, hi = mm["min"].as_py(), mm["max"].as_py()
-                if lo is None or hi is None:
-                    continue  # all-NULL column: no bound to record
+                if pa.types.is_floating(col.type) and pc.any(
+                    pc.is_nan(col)
+                ).as_py():
+                    # min_max skips NaN; Spark orders NaN above every
+                    # value, so its max is NaN, and so is its min when
+                    # nothing else is there
+                    hi = math.nan
+                    if not pc.any(pc.invert(pc.is_nan(col))).as_py():
+                        lo = math.nan
                 import datetime as _dt
 
                 if isinstance(lo, (_dt.date, _dt.datetime)):

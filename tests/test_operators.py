@@ -635,6 +635,174 @@ class TestChecks:
         )
         assert res.collect()[0].passed
 
+    def test_check_column_non_numeric_values(self, spark):
+        """min/max of a string column have no numeric ``value``: the
+        result keeps its declared double column, NULL in every row."""
+        df = spark.createDataFrame([("b",), ("c",)], "s string")
+        res = a.check_column(
+            spark, df, {"s": {"min": {"geq_to": "a"}, "max": {"leq_to": "c"}}}
+        )
+        assert res.schema.simpleString() == (
+            "struct<col_name:string,check_name:string,value:double,passed:boolean>"
+        )
+        assert [tuple(r) for r in res.collect()] == [
+            ("s", "min", None, True),
+            ("s", "max", None, True),
+        ]
+
+
+def _jobs_of(spark, fn):
+    """``(fn(), Spark jobs fn ran)``, counted through ``statusTracker``
+    under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the asynchronous listener bus
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestFixedCallCosts:
+    """Metadata and driver-built results cost no Spark job: check
+    results and command results are LocalRelations, CSV schema
+    sampling never starts a Python worker, and merge reads a table's
+    layout from one DESCRIBE."""
+
+    def test_check_results_collect_without_a_job(self, spark):
+        df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string")
+        res, _ = _jobs_of(
+            spark,
+            lambda: a.check_column(
+                spark, df, {"k": {"min": {"geq_to": 1}, "null_check": {}}}
+            ),
+        )
+        rows, jobs = _jobs_of(spark, res.collect)
+        assert jobs == 0
+        assert [tuple(r) for r in rows] == [
+            ("k", "min", 1.0, True),
+            ("k", "null_check", 0.0, True),
+        ]
+        df.createOrReplaceTempView("fcc_t")
+        res, _ = _jobs_of(
+            spark,
+            lambda: a.check_table(
+                spark, a.Table("fcc_t"), {"n": {"check_statement": "COUNT(*) = 2"}}
+            ),
+        )
+        rows, jobs = _jobs_of(spark, res.collect)
+        assert jobs == 0 and [tuple(r) for r in rows] == [("n", True)]
+
+    def test_literal_rows_df_is_a_local_relation(self, spark):
+        from pyspark.sql.types import _parse_datatype_string
+
+        from astro_spark.plans.literal import literal_rows_df
+
+        schema = "a string, n bigint, xs array<string>, d double"
+        df = literal_rows_df(
+            spark, [("x", 2**40, ["p", "q"], None), ("y`", -1, [], float("inf"))], schema
+        )
+        assert df.schema == _parse_datatype_string(schema)
+        rows, jobs = _jobs_of(spark, df.collect)
+        assert jobs == 0
+        assert [tuple(r) for r in rows] == [
+            ("x", 2**40, ["p", "q"], None),
+            ("y`", -1, [], float("inf")),
+        ]
+        empty = literal_rows_df(spark, [], schema)
+        assert empty.schema == _parse_datatype_string(schema)
+        assert empty.collect() == []
+
+    def test_merge_reads_layout_from_one_describe(self, spark, monkeypatch):
+        import importlib
+
+        from pyspark.sql.catalog import Catalog
+
+        # the package re-exports the function `merge` over the module name
+        m = importlib.import_module("astro_spark.operators.merge")
+
+        def _no_list_columns(*_a, **_k):
+            raise AssertionError("listColumns runs one-task Spark jobs")
+
+        monkeypatch.setattr(Catalog, "listColumns", _no_list_columns)
+        taken = []
+        for fn in ("_upsert_partition_scoped", "_upsert_file_scoped"):
+            orig = getattr(m, fn)
+
+            def spy(*args, _orig=orig, _fn=fn):
+                taken.append(_fn)
+                return _orig(*args)
+
+            monkeypatch.setattr(m, fn, spy)
+        for t in ("fcc_mp_tgt", "fcc_mp_src", "fcc_m_tgt"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        spark.sql(
+            "SELECT id, IF(id < 3, 'a', 'b') AS p, id * 10 AS v FROM range(6)"
+        ).write.partitionBy("p").format("parquet").saveAsTable("fcc_mp_tgt")
+        spark.sql(
+            "SELECT 1 AS id, 'a' AS p, 111 AS v UNION ALL "
+            "SELECT 9 AS id, 'b' AS p, 999 AS v"
+        ).write.format("parquet").saveAsTable("fcc_mp_src")
+        layout = m._table_layout(spark, "fcc_mp_tgt")
+        assert layout.provider == "parquet" and layout.partition_cols == ["p"]
+        a.merge(
+            spark, a.Table("fcc_mp_src"), a.Table("fcc_mp_tgt"), ["id"],
+            if_conflicts="update",
+        )
+        assert taken == ["_upsert_partition_scoped"]
+        res = {r.id: (r.p, r.v) for r in spark.table("fcc_mp_tgt").collect()}
+        assert res[1] == ("a", 111) and res[9] == ("b", 999) and len(res) == 7
+        # unpartitioned parquet target: the file-scoped strategy
+        spark.sql(
+            "SELECT id, id * 10 AS v FROM range(6)"
+        ).write.format("parquet").saveAsTable("fcc_m_tgt")
+        taken.clear()
+        a.merge(
+            spark, a.Table("fcc_mp_src"), a.Table("fcc_m_tgt"), ["id"],
+            columns=["id", "v"], if_conflicts="update",
+        )
+        assert taken == ["_upsert_file_scoped"]
+        assert spark.table("fcc_m_tgt").where("id = 1").first().v == 111
+        # a failed lookup raises instead of reading as "unpartitioned"
+        with pytest.raises(Exception, match="fcc_no_such_table"):
+            m._table_layout(spark, "fcc_no_such_table")
+
+    def test_table_layout_parses_v2_partitioning(self):
+        """The v2 ``# Partitioning`` block lists transforms; identity
+        transforms are the partition columns."""
+        from pyspark.sql import Row
+
+        from astro_spark.operators.merge import _table_layout
+
+        rows = [
+            ("id", "bigint"), ("ts", "timestamp"), ("my col", "string"),
+            ("", ""),
+            ("# Partitioning", ""),
+            ("Part 0", "`my col`"), ("Part 1", "years(ts)"),
+            ("Part 2", "bucket(4, id)"), ("Part 3", "id"),
+            ("", ""),
+            ("# Detailed Table Information", ""),
+            ("Name", "cat.db.t"), ("Provider", "Iceberg"),
+            ("Location", "s3a://b/t"),
+        ]
+
+        class _Described:
+            def sql(self, _stmt):
+                return self
+
+            def collect(self):
+                return [Row(col_name=c, data_type=t, comment="") for c, t in rows]
+
+        layout = _table_layout(_Described(), "cat.db.t")
+        assert layout.partition_cols == ["my col", "id"]
+        assert layout.provider == "iceberg" and layout.location == "s3a://b/t"
+        assert layout.parquet_location is None
+
 
 class TestExport:
     def test_single_file_and_exception_mode(self, spark, sf_dir, tmp_path):
@@ -1849,7 +2017,7 @@ class TestApplyChanges:
             expire_applied_seq,
         )
         from astro_spark.operators.merge import (
-            _parquet_location,
+            _table_layout,
             _write_cow_manifest,
         )
         from astro_spark.sources.writers import _hadoop_fs
@@ -1861,7 +2029,7 @@ class TestApplyChanges:
         )
         apply_changes(spark, t, changes, ["k"], seq_col="seq", track_seq=True)
         side = _seq_sidecar(t)
-        loc = _parquet_location(spark, side.qualified_name)
+        loc = _table_layout(spark, side.qualified_name).parquet_location
         fs, jvm, root = _hadoop_fs(spark, loc)
         HPath = jvm.org.apache.hadoop.fs.Path
         # simulate an interrupted rewrite: stage + manifest left behind
@@ -2166,12 +2334,12 @@ class TestCowRecovery:
         files untouched.  recover_table must finish the commit exactly."""
         import astro_spark as a
         from astro_spark.operators.merge import (
-            _parquet_location,
+            _table_layout,
             _write_cow_manifest,
         )
 
         tgt = self._make_table(spark, [(1, "a"), (2, "b"), (3, "c")])
-        loc = _parquet_location(spark, tgt.qualified_name)
+        loc = _table_layout(spark, tgt.qualified_name).parquet_location
         HPath, root, fs = self._fs(spark, loc)
         old_files = [
             st.getPath().toString()
@@ -2209,12 +2377,12 @@ class TestCowRecovery:
         recovery only retires the old generation (no duplicate rows)."""
         import astro_spark as a
         from astro_spark.operators.merge import (
-            _parquet_location,
+            _table_layout,
             _write_cow_manifest,
         )
 
         tgt = self._make_table(spark, [(1, "a"), (2, "b")])
-        loc = _parquet_location(spark, tgt.qualified_name)
+        loc = _table_layout(spark, tgt.qualified_name).parquet_location
         HPath, root, fs = self._fs(spark, loc)
         old_files = [
             st.getPath().toString()
@@ -2244,12 +2412,12 @@ class TestCowRecovery:
         stage WITH one belongs to recovery and must survive vacuum."""
         import astro_spark as a
         from astro_spark.operators.merge import (
-            _parquet_location,
+            _table_layout,
             _write_cow_manifest,
         )
 
         tgt = self._make_table(spark, [(1, "a")], n_files=1)
-        loc = _parquet_location(spark, tgt.qualified_name)
+        loc = _table_layout(spark, tgt.qualified_name).parquet_location
         HPath, root, fs = self._fs(spark, loc)
         spark.createDataFrame([(5, "e")], "k long, v string").coalesce(
             1
@@ -2272,7 +2440,7 @@ class TestCowRecovery:
         import uuid
 
         import astro_spark as a
-        from astro_spark.operators.merge import _parquet_location, merge
+        from astro_spark.operators.merge import _table_layout, merge
 
         tgt = self._make_table(spark, [(1, "a"), (2, "b"), (3, "c")])
         src = a.Table(f"cowrec_src_{uuid.uuid4().hex[:8]}")
@@ -2282,7 +2450,7 @@ class TestCowRecovery:
         merge(spark, src, tgt, ["k"], if_conflicts="update")
         got = {(r.k, r.v) for r in spark.table(tgt.name).collect()}
         assert got == {(1, "a"), (2, "b2"), (3, "c"), (4, "d")}
-        loc = _parquet_location(spark, tgt.qualified_name)
+        loc = _table_layout(spark, tgt.qualified_name).parquet_location
         HPath, root, fs = self._fs(spark, loc)
         names = [st.getPath().getName() for st in fs.listStatus(root)]
         assert not any(n.startswith(".cow_stage_") for n in names)
@@ -2298,13 +2466,13 @@ class TestCowRecovery:
 
         import astro_spark as a
         from astro_spark.operators.merge import (
-            _parquet_location,
+            _table_layout,
             _write_cow_manifest,
             merge,
         )
 
         tgt = self._make_table(spark, [(1, "a"), (2, "b")])
-        loc = _parquet_location(spark, tgt.qualified_name)
+        loc = _table_layout(spark, tgt.qualified_name).parquet_location
         HPath, root, fs = self._fs(spark, loc)
         spark.createDataFrame([(9, "q")], "k long, v string").coalesce(
             1
@@ -2330,10 +2498,10 @@ class TestCowRecovery:
         import uuid
 
         import astro_spark as a
-        from astro_spark.operators.merge import _parquet_location, merge
+        from astro_spark.operators.merge import _table_layout, merge
 
         tgt = self._make_table(spark, [(1, "a"), (2, "b")])
-        loc = _parquet_location(spark, tgt.qualified_name)
+        loc = _table_layout(spark, tgt.qualified_name).parquet_location
         HPath, root, fs = self._fs(spark, loc)
         spark.createDataFrame([(9, "q")], "k long, v string").coalesce(
             1

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 import pytest
 from hypothesis import strategies as st
 
@@ -1179,13 +1179,19 @@ class TestArrowCommitEquivalence:
     SEMANTICALLY IDENTICAL to the JVM log transaction
     (`tt_commit_files`) — same resolved file lists, same skipping
     stats, same schema, same read-back — across random append
-    sequences and BOTH log forms (inline / checkpoint-compacted)."""
+    sequences and BOTH log forms (inline / checkpoint-compacted).  The
+    float stats column holds NaN: both commits must record Spark's
+    bounds (NaN orders above every value)."""
 
     @SETTINGS
     @given(
         batches=st.lists(
             st.lists(
-                st.tuples(st.integers(0, 50), st.integers(-5, 5)),
+                st.tuples(
+                    st.integers(0, 50),
+                    st.integers(-5, 5),
+                    st.sampled_from([1.0, 3.0, 7.0, float("nan"), None]),
+                ),
                 min_size=1,
                 max_size=4,
             ),
@@ -1194,9 +1200,14 @@ class TestArrowCommitEquivalence:
         ),
         inline_max=st.sampled_from([1, 2, 1000]),
     )
+    @example(  # a NaN among values, and an all-NaN file
+        batches=[[(1, 1, 1.0), (2, 2, float("nan")), (3, 3, 3.0)], [(4, 4, float("nan"))]],
+        inline_max=1000,
+    )
     def test_arrow_commit_equals_jvm_commit(
         self, spark, tmp_path_factory, batches, inline_max
     ):
+        import json
         import os
         import uuid as _uuid
 
@@ -1212,14 +1223,15 @@ class TestArrowCommitEquivalence:
         r_jvm, r_arw = str(base / "jvm"), str(base / "arw")
         spark.conf.set("spark.astro.tt.inlineFilesMax", str(inline_max))
         try:
-            seed = spark.createDataFrame([(0, 0)], "k long, v long")
-            a.tt_create(spark, seed, r_jvm, stats_cols=["k"])
-            a.tt_create(spark, seed, r_arw, stats_cols=["k"])
+            seed = spark.createDataFrame([(0, 0, 0.0)], "k long, v long, x double")
+            a.tt_create(spark, seed, r_jvm, stats_cols=["k", "x"])
+            a.tt_create(spark, seed, r_arw, stats_cols=["k", "x"])
             for i, rows in enumerate(batches):
                 t = pa.table(
                     {
                         "k": pa.array([r[0] for r in rows], pa.int64()),
                         "v": pa.array([r[1] for r in rows], pa.int64()),
+                        "x": pa.array([r[2] for r in rows], pa.float64()),
                     }
                 )
                 rel = f"files/batch_{i}/part-0.parquet"
@@ -1231,11 +1243,11 @@ class TestArrowCommitEquivalence:
             # identical read-back at EVERY version
             for ver in range(len(batches) + 1):
                 gj = sorted(
-                    (r.k, r.v)
+                    (r.k, r.v, repr(r.x))
                     for r in a.tt_read(spark, r_jvm, ver).collect()
                 )
                 ga = sorted(
-                    (r.k, r.v)
+                    (r.k, r.v, repr(r.x))
                     for r in a.tt_read(spark, r_arw, ver).collect()
                 )
                 assert gj == ga, f"version {ver} diverged"
@@ -1252,17 +1264,156 @@ class TestArrowCommitEquivalence:
             ours = lambda fl: sorted(f for f in fl if f.startswith("files/batch_"))
             assert len(fj) == len(fa)
             assert ours(fj) == ours(fa)
-            assert {f: s for f, s in sj.items() if f.startswith("files/batch_")} == {
-                f: s for f, s in sa.items() if f.startswith("files/batch_")
-            }  # exact same [min, max] per batch file per column
+            # exact same [min, max] per batch file per column (as JSON:
+            # NaN bounds never compare equal as floats)
+            assert json.dumps(
+                {f: s for f, s in sj.items() if f.startswith("files/batch_")},
+                sort_keys=True,
+            ) == json.dumps(
+                {f: s for f, s in sa.items() if f.startswith("files/batch_")},
+                sort_keys=True,
+            )
             assert mj.get("schema") == ma.get("schema")
             assert tt_log.stats_cols_of(mj) == tt_log.stats_cols_of(ma)
             # stats-based pruning behaves identically
             nj = a.tt_read(spark, r_jvm, where="k >= 40").count()
             na = a.tt_read(spark, r_arw, where="k >= 40").count()
             assert nj == na
+            nj = a.tt_read(spark, r_jvm, where="x > 5").count()
+            na = a.tt_read(spark, r_arw, where="x > 5").count()
+            assert nj == na
         finally:
             spark.conf.unset("spark.astro.tt.inlineFilesMax")
+
+
+def _changes_two_except_all(spark, root, from_version, to_version):
+    """The reference change feed: two ``exceptAll`` per version, each
+    version's added and removed files read through its own schema,
+    the per-version frames unioned by name."""
+    from pyspark.sql import functions as F
+
+    from astro_spark.operators import timetravel as tt
+    from astro_spark.sources import tt_log
+
+    store = tt._store(spark, root)
+    out = None
+    prev_files, _ = tt_log.resolve(store, tt_log.read_manifest(store, from_version))
+    for v in range(from_version + 1, to_version + 1):
+        cur_m = tt_log.read_manifest(store, v)
+        cur_files, _ = tt_log.resolve(store, cur_m)
+        added = [f for f in cur_files if f not in set(prev_files)]
+        removed = [f for f in prev_files if f not in set(cur_files)]
+        prev_files = cur_files
+        synth = {"schema": cur_m.get("schema"), **tt_log.carry_partition(cur_m)}
+        ad = tt._read_files(spark, root, {"files": added, **synth}) if added else None
+        rd = tt._read_files(spark, root, {"files": removed, **synth}) if removed else None
+        if ad is None and rd is None:
+            continue
+        ad = rd.limit(0) if ad is None else ad
+        rd = ad.limit(0) if rd is None else rd
+        chg = (
+            ad.exceptAll(rd)
+            .withColumn("_change_type", F.lit("insert"))
+            .unionByName(rd.exceptAll(ad).withColumn("_change_type", F.lit("delete")))
+            .withColumn("_commit_version", F.lit(v).cast("long"))
+        )
+        out = chg if out is None else out.unionByName(chg, allowMissingColumns=True)
+    return out
+
+
+class TestChangeFeedEquivalence:
+    """``tt_changes`` computes the whole range with ONE signed-count
+    aggregate; it must equal the two-``exceptAll``-per-version feed in
+    schema (nullability included), column order and row multiset —
+    over duplicate rows, NULLs, NaN, -0.0, a no-op (properties-only)
+    commit and a schema-evolving append inside the range."""
+
+    @SETTINGS
+    @given(
+        ops=st.lists(
+            st.one_of(
+                st.tuples(
+                    st.just("append"),
+                    st.lists(
+                        st.tuples(
+                            st.integers(0, 3),
+                            st.sampled_from([0.0, -0.0, 1.5, float("nan"), None]),
+                        ),
+                        min_size=1,
+                        max_size=4,
+                    ),
+                ),
+                st.tuples(st.just("delete"), st.integers(0, 3)),
+                st.tuples(st.just("update"), st.integers(0, 3)),
+                st.tuples(st.just("optimize"), st.none()),
+            ),
+            min_size=1,
+            max_size=3,
+        ),
+        noop_at=st.integers(0, 3),
+        evolve_at=st.integers(0, 3),
+        start=st.integers(0, 2),
+    )
+    def test_one_aggregate_equals_two_except_all(
+        self, spark, tmp_path_factory, ops, noop_at, evolve_at, start
+    ):
+        import uuid as _uuid
+
+        import astro_spark as a
+
+        root = str(tmp_path_factory.mktemp("cdfeq") / _uuid.uuid4().hex)
+        nan = float("nan")
+        a.tt_create(
+            spark,
+            spark.createDataFrame(
+                [(1, 0.0), (1, 0.0), (2, None), (3, nan), (0, -0.0)],
+                "k long, x double",
+            ),
+            root,
+        )
+        ops = list(ops)
+        ops.insert(min(noop_at, len(ops)), ("noop", None))
+        ops.insert(min(evolve_at, len(ops)), ("evolve", None))
+        evolved = False
+        for op, arg in ops:
+            if op == "append":
+                a.tt_append(
+                    spark,
+                    spark.createDataFrame(arg, "k long, x double"),
+                    root,
+                )
+            elif op == "delete":
+                a.tt_delete_where(spark, root, f"k = {arg}")
+            elif op == "update":
+                a.tt_update_where(spark, root, {"x": "-0.0"}, f"k = {arg}")
+            elif op == "optimize":
+                a.tt_optimize(spark, root)
+            elif op == "noop":
+                a.tt_set_properties(spark, root, {"owner": "x"})
+            elif not evolved:
+                a.tt_append(
+                    spark,
+                    spark.createDataFrame(
+                        [(1, 0.0, "s"), (3, nan, None)], "k long, x double, s string"
+                    ),
+                    root,
+                    merge_schema=True,
+                )
+                evolved = True
+        head = a.tt_history(spark, root).agg({"version": "max"}).first()[0]
+        start = min(start, head - 1)
+        got = a.tt_changes(spark, root, start, head)
+        want = _changes_two_except_all(spark, root, start, head)
+        if want is None:  # only no-op commits in range
+            assert got.collect() == []
+            return
+
+        def bag(df):  # repr keeps NaN comparable and -0.0 distinct
+            return sorted(tuple(repr(v) for v in r) for r in df.collect())
+
+        assert got.schema == want.schema, (got.schema, want.schema)
+        assert got.columns == want.columns
+        assert bag(got) == bag(want), ops
 
 
 class TestConcurrentCommitLinearizability:

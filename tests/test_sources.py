@@ -202,6 +202,25 @@ class TestCappedInference:
         assert types["x"] == "double"
         assert types["name"] == "string"
 
+    def test_infers_without_a_python_worker(self, spark, tmp_path, monkeypatch):
+        """The sampled lines reach the JVM CSV reader as a
+        Dataset[String]: no ``DataFrame.rdd`` (a Python worker) on the
+        way, with the caller's options applied to the sample."""
+        def _no_rdd(self):
+            raise AssertionError("schema sampling went through a Python RDD")
+
+        # the session's concrete DataFrame class, not the pyspark.sql base
+        monkeypatch.setattr(type(spark.range(0)), "rdd", property(_no_rdd))
+        p = tmp_path / "semi.csv"
+        p.write_text("k;x;when;name\n1;2.5;2024-01-02;a\n2;;2024-03-04;b\n")
+        df = a.load_file(
+            spark, a.File(str(p), filetype=a.FileType.CSV), csv_options={"sep": ";"}
+        )
+        assert df.dtypes == [
+            ("k", "int"), ("x", "double"), ("when", "date"), ("name", "string")
+        ]
+        assert sorted((r.k, r.x) for r in df.collect()) == [(1, 2.5), (2, None)]
+
     def test_small_sample_cap(self, spark, sf_dir, tmp_path):
         li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
         p = str(tmp_path / "li.csv")

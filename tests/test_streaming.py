@@ -1490,7 +1490,7 @@ class TestCdcAutoCompact:
 
         import astro_spark as a
         from astro_spark.operators.load_file import save_dataframe_as_table
-        from astro_spark.operators.merge import _parquet_location
+        from astro_spark.operators.merge import _table_layout
         from astro_spark.streaming import load_file_stream_merge
 
         base = spark.range(0, 300).select(
@@ -1518,9 +1518,8 @@ class TestCdcAutoCompact:
             )
 
         def _data_files():
-            loc = _parquet_location(spark, tgt.qualified_name).removeprefix(
-                "file:"
-            )
+            loc = _table_layout(spark, tgt.qualified_name).parquet_location
+            loc = loc.removeprefix("file:")
             return [
                 f
                 for f in os.listdir(loc)
